@@ -10,7 +10,7 @@ re-expressed idiomatically on the Spark DataFrame API / Catalyst:
   instead of an O(weeks x rentals) correlated rescan).
 - ``operators``              — the SURVEY.md §2 operator inventory as named,
   individually-tested functions.
-- ``incremental``            — the watermark / dirty-week / MERGE-upsert protocol
+- ``incremental``            — the watermark / dirty-week / keyed-upsert protocol
   (etl_script_incremental_pandas.py:24-298) on Parquet storage.
 - ``llm``                    — large-scale training-data-pipeline operators
   (dedup, similarity search, text analysis, multimodal plumbing).

@@ -8,15 +8,20 @@ Re-implements the run-loop of etl_script_incremental_pandas.py:24-298 on Spark:
   Step 3a affected weeks from changed rows, set-based          (etl.py:130-146, I-4)
   Step 3b trailing-gap backfill weeks                          (etl.py:148-194, I-5)
   Step 3c union; early-exit when nothing to do                 (etl.py:196-213, I-6)
-  Step 4  recompute + MERGE upsert                             (etl.py:216-271, I-7)
+  Step 4  recompute + keyed upsert                             (etl.py:216-271, I-7)
   Step 5  advance watermark only after the summary commits     (etl.py:274-284, O-8)
 
 Deliberate departure from the reference (SURVEY.md O-9): Step 4 does NOT loop
 per week re-scanning the source 3x per week. The window-formulation summary is
 O(n + weeks) for ANY number of dirty weeks, so we compute the full summary once
-and semi-join it down to the affected weeks. At 100 TB the recompute is two
+and filter it down to the affected suffix of weeks. The recompute is two
 hash aggregations over the fact table — the same cost as one dirty week in the
-reference's scheme — and the MERGE rewrites only affected rows/partitions.
+reference's scheme.
+
+Spark does only the fact-table work: one probe aggregate, plus the summary
+plan when weeks are dirty. The summary (one row per week) and the watermark
+(one row) stay in the driver: the suffix is collected as Arrow and both tables
+are published as single files by ``upsert.merge_upsert``.
 
 Boundary semantics are ref.sql's date-granularity (SURVEY.md §2.X), so the
 incremental result is bit-identical to the full-recompute oracle — the
@@ -28,10 +33,13 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..plans.weekly_summary import weekly_rental_summary
+from ..schemas import WEEKLY_RENTAL_SUMMARY
 from .upsert import merge_upsert, read_parquet_table
 from .watermark import DEFAULT_WATERMARK_START, WatermarkStore
 
@@ -60,7 +68,6 @@ def run_incremental(
     state_dir: str,
     process_name: str = ETL_PROCESS_NAME,
     as_of: dt.date | None = None,
-    fail_before_watermark: bool = False,
     fail_point: str | None = None,
 ) -> IncrementalRunReport:
     """One incremental run. ``rental`` is the current source snapshot.
@@ -70,28 +77,25 @@ def run_incremental(
 
     * ``"after_reset"``    — after the empty-target watermark reset (step 0)
     * ``"after_window"``   — after the time window is read, before any write
-    * ``"before_merge"``   — after the updates are computed, before the MERGE
-    * ``"before_watermark"`` — after the summary MERGE, before the watermark
-      advance (the O-8 ordering certificate; ``fail_before_watermark=True``
-      is the backward-compatible alias)
+    * ``"before_merge"``   — after the updates are computed, before the upsert
+    * ``"before_watermark"`` — after the summary upsert, before the watermark
+      advance (the O-8 ordering certificate)
 
     The protocol invariant under ANY of these: a rerun on the same (or a
     further-grown) snapshot converges to the full recompute, because the
     watermark only advances after the summary commit and every step before
-    the MERGE is read-only."""
-    if fail_before_watermark:
-        fail_point = "before_watermark"
+    the upsert is read-only."""
 
     def _maybe_fail(point: str) -> None:
         if fail_point == point:
             raise RuntimeError(f"injected crash at {point}")
 
-    store = WatermarkStore(spark, state_dir)
+    store = WatermarkStore(state_dir)
 
     # --- Step 0: empty-target → reset watermark (I-2) -------------------------
-    target = read_parquet_table(spark, target_dir)
+    target = read_parquet_table(target_dir)
     watermark_reset = False
-    if target is None or target.isEmpty():
+    if target is None or target.num_rows == 0:
         store.write(process_name, DEFAULT_WATERMARK_START)
         watermark_reset = True
     _maybe_fail("after_reset")
@@ -137,10 +141,9 @@ def run_incremental(
     backfill: set[dt.date] = set()
     if probe.max_activity is not None:
         max_src_week = _monday(probe.max_activity)
-        max_tgt_row = (
-            target.agg(F.max("week_beginning").alias("m")).first() if target else None
+        max_tgt_week = (
+            pc.max(target["week_beginning"]).as_py() if target is not None else None
         )
-        max_tgt_week = max_tgt_row.m if max_tgt_row else None
         start = None
         if max_tgt_week is None and probe.min_activity is not None:
             start = _monday(probe.min_activity)
@@ -162,7 +165,7 @@ def run_incremental(
             watermark_reset=watermark_reset,
         )
 
-    # --- Step 4: recompute affected weeks in ONE plan + MERGE (I-7, O-9) -----
+    # --- Step 4: recompute affected weeks in ONE plan + upsert (I-7, O-9) ----
     # Suffix expansion (deliberate fix over the reference): a changed row also
     # shifts outstanding_rentals_at_week_end for every week BETWEEN its rental
     # and return weeks, which the reference's marking (etl.py:139-146) misses —
@@ -184,14 +187,13 @@ def run_incremental(
             F.col("net_change_in_outstanding").cast("int"),
             F.current_timestamp().alias("last_updated"),
         )
-        # materialize the (weeks-sized) update set once: it is consumed by
-        # the row-count probe AND the MERGE write, and each reference would
-        # otherwise re-execute the full data-sized summary plan
-        .localCheckpoint(eager=False)
+        # weeks-sized: collected once, in the declared schema, so every
+        # published file has the same types whatever nullability the plan has
+        .toArrow()
+        .cast(to_arrow_schema(WEEKLY_RENTAL_SUMMARY))
     )
-    n_weeks_written = updates.count()
     _maybe_fail("before_merge")
-    merge_upsert(spark, target_dir, updates, key=["week_beginning"])
+    merge_upsert(target_dir, updates, key=["week_beginning"])
     _maybe_fail("before_watermark")
 
     # --- Step 5: advance watermark AFTER the summary commit (O-8) ------------
@@ -201,6 +203,6 @@ def run_incremental(
         new_watermark=cur_max,
         delta_rows=delta_rows,
         affected_weeks=affected,
-        weeks_written=n_weeks_written,
+        weeks_written=updates.num_rows,
         watermark_reset=watermark_reset,
     )

@@ -1,190 +1,69 @@
-"""Idempotent MERGE upsert on plain Parquet (SURVEY.md A-5/A-6, O-7).
+"""Keyed upsert for the ETL's small state tables (SURVEY.md A-5/A-6, O-7).
 
-The reference relies on Postgres ``INSERT ... ON CONFLICT DO UPDATE``
-(etl_script_incremental_pandas.py:249-267). Plain Parquet has no in-place
-upsert, so we implement the documented fallback (SURVEY.md §7 "What's hard"):
+The reference keeps its state in two tiny Postgres tables written with
+``INSERT ... ON CONFLICT DO UPDATE`` (etl_script_incremental_pandas.py:
+249-267, 276-284): one summary row per week and one watermark row per
+process. Both fit in the driver, so no Spark job touches them here:
 
-    read target ∪ updates → keep the newest row per key → staged atomic swap
+    read the one file → drop rows whose key is in the updates → append the
+    updates → write a hidden temp file → fsync → ``os.replace`` onto the
+    table's fixed file name
 
-On a real lakehouse deployment this module is the seam where Delta Lake's
-``MERGE INTO`` (or Iceberg's) slots in — same call signature, true atomic
-commit, no full rewrite. For the summary/watermark tables here the rewrite is
-trivially small (one row per week / per process). For a large partitioned
-target, pass ``partition_by`` and only affected partitions are rewritten
-(dynamic-partition-overwrite shape), which is what scales to 100 TB: the
-rewrite cost is proportional to dirty partitions, not table size.
+``os.replace`` is atomic on POSIX, so a reader sees either the old table or
+the new one, never a missing or half-written table. A crash before the
+replace leaves only a hidden ``.tmp-*`` file, which Spark and pyarrow both
+skip when they read the directory.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+# the one visible data file of a table directory
+TABLE_FILE = "table.parquet"
 
 
-def delta_available() -> bool:
-    """Feature-detect Delta Lake (not shipped in this container)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def merge_condition(key: list[str], target: str = "t", source: str = "u") -> str:
-    """The MERGE ON condition for ``DeltaTable.merge`` (pure, unit-testable
-    without delta installed)."""
-    return " AND ".join(f"{target}.{k} = {source}.{k}" for k in key)
-
-
-def _delta_merge(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: list[str],
-    order_by: str | None,
-    partition_by: list[str] | None = None,
-) -> int:
-    """True transactional MERGE via Delta (reference etl.py:249-267
-    `ON CONFLICT DO UPDATE` parity: atomic commit, concurrent-writer-safe,
-    no table rewrite). Same signature/result as the parquet fallback."""
-    from delta.tables import DeltaTable
-
-    if not DeltaTable.isDeltaTable(spark, target_dir):
-        writer = updates.write.format("delta").mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(target_dir)
-    else:
-        merge = (
-            DeltaTable.forPath(spark, target_dir)
-            .alias("t")
-            .merge(updates.alias("u"), merge_condition(key))
-        )
-        if order_by:
-            merge = merge.whenMatchedUpdateAll(
-                condition=f"u.{order_by} >= t.{order_by}"
-            )
-        else:
-            merge = merge.whenMatchedUpdateAll()
-        merge.whenNotMatchedInsertAll().execute()
-    return spark.read.format("delta").load(target_dir).count()
-
-
-def _looks_like_delta(path: str) -> bool:
-    """A Delta table is a parquet dir with a `_delta_log/`; existing plain
-    parquet targets keep the fallback path even when delta is installed."""
-    return os.path.isdir(os.path.join(path, "_delta_log"))
-
-
-def read_parquet_table(
-    spark: SparkSession, path: str, schema=None
-) -> DataFrame | None:
-    """Read a parquet table dir; None if absent/empty (A-3 existence probe).
-
-    Detection walks the tree: a table written with ``partitionBy`` has NO
-    top-level ``*.parquet`` files, only ``key=value/`` subdirectories — a
-    top-level-only check would report such a table absent, and a merge that
-    treats the target as absent silently replaces it with just the updates
-    (the round-1 ADVICE data-loss finding)."""
-    if not os.path.isdir(path):
+def read_parquet_table(path: str) -> pa.Table | None:
+    """The table at ``path`` read in the driver; None when it does not exist
+    yet (A-3 existence probe)."""
+    file = os.path.join(path, TABLE_FILE)
+    if not os.path.exists(file):
         return None
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    )
-    if not has_parquet:
-        return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return pq.read_table(file)
 
 
-def _atomic_swap(new_dir: str, target_dir: str) -> None:
-    """Replace target_dir with new_dir via rename (POSIX-atomic enough for
-    local/driver-coordinated writes; object stores use Delta instead)."""
-    bak = f"{target_dir}.bak-{uuid.uuid4().hex[:8]}"
-    if os.path.isdir(target_dir):
-        os.rename(target_dir, bak)
-    os.rename(new_dir, target_dir)
-    if os.path.isdir(bak):
-        shutil.rmtree(bak)
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_dir: str,
-    updates: DataFrame,
-    key: list[str],
-    order_by: str | None = None,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Upsert ``updates`` into the parquet table at ``target_dir`` keyed by
-    ``key``: update rows win over existing rows with the same key.
-
-    ``order_by``: optional column whose larger value wins within a key
-    (defaults to a source-precedence flag — updates beat target).
-    Returns the post-merge row count.
-
-    Partitioned targets (``partition_by``) use TRUE dynamic-partition
-    overwrite: only partitions present in ``updates`` are read back, merged,
-    and rewritten — untouched partitions' files are never touched, so the
-    rewrite cost is proportional to dirty partitions, not table size (the
-    shape that scales to 100 TB). Unpartitioned targets use the read-merge-
-    atomic-swap fallback (trivially small for the summary/watermark tables).
-
-    When Delta Lake is on the classpath (feature-detected; not in this
-    container), the merge routes through ``DeltaTable.merge`` instead — the
-    real transactional seam matching the reference's Postgres ON CONFLICT.
-    """
-    if delta_available() and (
-        _looks_like_delta(target_dir) or not os.path.isdir(target_dir)
-    ):
-        return _delta_merge(spark, target_dir, updates, key, order_by, partition_by)
-    existing = read_parquet_table(spark, target_dir)
-    if existing is not None and partition_by:
-        # restrict the merge universe to DIRTY partitions only; the distinct
-        # partition-value set is small by construction (it is the week list /
-        # process list), so the semi join broadcasts
-        dirty = updates.select(*partition_by).distinct()
-        existing = existing.join(F.broadcast(dirty), partition_by, "left_semi")
-    tagged = updates.withColumn("__precedence", F.lit(1))
+def merge_upsert(target_dir: str, updates: pa.Table, key: list[str]) -> int:
+    """Upsert ``updates`` into the table at ``target_dir`` keyed by ``key``:
+    update rows replace existing rows with the same key, other rows survive.
+    The table keeps ``updates.schema``. Returns the post-merge row count."""
+    merged = updates
+    existing = read_parquet_table(target_dir)
     if existing is not None:
-        tagged = tagged.unionByName(
-            existing.select(*updates.columns).withColumn("__precedence", F.lit(0))
+        kept = existing.join(updates.select(key), keys=key, join_type="left anti")
+        merged = pa.concat_tables(
+            [kept.select(updates.column_names).cast(updates.schema), updates]
         )
-    order_cols = [F.col("__precedence").desc()]
-    if order_by:
-        order_cols.insert(0, F.col(order_by).desc())
-    w = Window.partitionBy(*key).orderBy(*order_cols)
-    merged = (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__precedence")
-    )
-
-    if partition_by:
-        if existing is None:
-            merged.repartition(*partition_by).write.partitionBy(
-                *partition_by
-            ).mode("overwrite").parquet(target_dir)
-        else:
-            # dynamic mode replaces ONLY the partitions present in `merged`
-            # (Spark's committer stages per-partition then renames); clean
-            # partitions are untouched on disk
-            merged.repartition(*partition_by).write.partitionBy(
-                *partition_by
-            ).option("partitionOverwriteMode", "dynamic").mode(
-                "overwrite"
-            ).parquet(target_dir)
-        return spark.read.parquet(target_dir).count()
-
-    staging = f"{target_dir}.staging-{uuid.uuid4().hex[:8]}"
-    merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    _atomic_swap(staging, target_dir)
-    return n
+    os.makedirs(target_dir, exist_ok=True)
+    tmp = os.path.join(target_dir, f".tmp-{uuid.uuid4().hex}.parquet")
+    try:
+        with open(tmp, "wb") as fh:
+            pq.write_table(merged, fh, store_schema=False)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(target_dir, TABLE_FILE))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    # make the rename itself durable before a later write (the watermark)
+    # can depend on it
+    dir_fd = os.open(target_dir, os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+    return merged.num_rows

@@ -125,7 +125,6 @@ def q_incremental_weekly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .incremental import run_incremental
-    from .incremental.upsert import read_parquet_table
 
     rental = load_rental(spark, sf_dir)
     cut = rental.selectExpr(
@@ -137,11 +136,7 @@ def q_incremental_weekly_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         tgt, st = f"{root}/target", f"{root}/state"
         run_incremental(spark, rental.where(F.col("last_update") <= F.lit(cut_ts)), tgt, st)
         run_incremental(spark, rental, tgt, st)
-        out = (
-            read_parquet_table(spark, tgt)
-            .drop("last_updated")
-            .orderBy("week_beginning")
-        )
+        out = spark.read.parquet(tgt).drop("last_updated").orderBy("week_beginning")
         out = spark.createDataFrame(out.collect(), out.schema)  # detach from temp dir
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -7,8 +7,7 @@ The two table-layout problems every parquet lake hits at 100 TB:
   files far below the ~128 MB sweet spot; each file costs a task + a footer
   read + an object-store request, so a million 1 MB files is 100× slower to
   scan than the same bytes in 8k files. ``compact_table`` rewrites a table
-  (or one partition of it) to size-targeted files behind the same atomic
-  staged swap the upsert sink uses.
+  (or one partition of it) to size-targeted files behind a staged swap.
 
 - **No data-skipping.** Parquet row groups carry min/max stats, but they only
   prune if values are CLUSTERED — a random layout makes every file's range
@@ -24,13 +23,24 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..incremental.upsert import _atomic_swap
-
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _atomic_swap(new_dir: str, target_dir: str) -> None:
+    """Replace target_dir with new_dir by two renames: the target moves
+    aside, then the new dir takes its place. Between the renames the table
+    is absent, so this suits offline maintenance, not the ETL's publish."""
+    bak = f"{target_dir}.bak-{uuid.uuid4().hex[:8]}"
+    if os.path.isdir(target_dir):
+        os.rename(target_dir, bak)
+    os.rename(new_dir, target_dir)
+    if os.path.isdir(bak):
+        shutil.rmtree(bak)
 
 
 def table_file_stats(path: str) -> tuple[int, int]:

@@ -1,4 +1,4 @@
-"""Streaming sinks: keyed MERGE into a lake table via ``foreachBatch``.
+"""Streaming sinks: keyed upsert into a parquet table via ``foreachBatch``.
 
 The missing piece between the streaming aggregations and the incremental
 protocol: Structured Streaming's built-in file sink is append-only, but a
@@ -13,9 +13,9 @@ revises it — appending would duplicate windows. ``foreachBatch`` +
 - the merge is idempotent on the key, so a replayed batch (restart after a
   crash between sink-commit and checkpoint-commit) converges to the same
   table — exactly-once EFFECT from at-least-once delivery;
-- when Delta is on the classpath the same call routes through
-  ``DeltaTable.merge`` (incremental/upsert.py), making the commit atomic
-  under concurrent readers.
+- each batch is collected to the driver as Arrow and published as one file
+  with an atomic rename (incremental/upsert.py), so readers never see a
+  half-written table. This suits aggregate tables that fit in the driver.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from __future__ import annotations
 import tempfile
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
 
 from ..incremental.upsert import merge_upsert
@@ -45,9 +46,9 @@ def stream_merge_to_parquet(
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_upsert(batch_df.sparkSession, target_dir, batch_df, key=key)
+        batch = batch_df.toArrow().cast(to_arrow_schema(batch_df.schema))
+        if batch.num_rows:
+            merge_upsert(target_dir, batch, key=key)
 
     writer = (
         sdf.writeStream.foreachBatch(sink)

@@ -6,14 +6,21 @@ reference intended but never automated.
 (c) from-empty bootstrap   — empty target ⇒ watermark reset ⇒ full history
 (d) no-op run              — no changes ⇒ watermark advances, zero writes
 (e) crash safety           — crash between summary write and watermark ⇒ rerun converges
+
+plus the driver-side keyed upsert the summary and watermark tables go
+through, and the Spark job budget of a run.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,7 +29,7 @@ from pagila_etl_airflow_assignment_spark.incremental import (
     WatermarkStore,
     run_incremental,
 )
-from pagila_etl_airflow_assignment_spark.incremental.upsert import read_parquet_table
+from pagila_etl_airflow_assignment_spark.incremental.upsert import merge_upsert
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
     weekly_rental_summary,
 )
@@ -47,8 +54,7 @@ def dirs():
 
 def _target_rows(spark, target_dir):
     """Target contents minus the nondeterministic audit column (SURVEY H-8)."""
-    df = read_parquet_table(spark, target_dir)
-    assert df is not None
+    df = spark.read.parquet(target_dir)
     return sorted(
         tuple(r) for r in df.drop("last_updated").collect()
     )
@@ -129,7 +135,7 @@ def test_noop_advances_watermark(spark, rental, dirs):
     (etl_script_incremental_pandas.py:202-213)."""
     target_dir, state_dir = dirs
     r1 = run_incremental(spark, rental, target_dir, state_dir)
-    store = WatermarkStore(spark, state_dir)
+    store = WatermarkStore(state_dir)
     assert store.read("pagila_weekly_rental_summary") == r1.new_watermark
     r2 = run_incremental(spark, rental, target_dir, state_dir)
     assert r2.noop and r2.new_watermark == r1.new_watermark
@@ -145,10 +151,10 @@ def test_crash_between_merge_and_watermark_converges(spark, rental, dirs):
     grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1998, 1, 1)))
     with pytest.raises(RuntimeError, match="injected crash"):
         run_incremental(
-            spark, grown, target_dir, state_dir, fail_before_watermark=True
+            spark, grown, target_dir, state_dir, fail_point="before_watermark"
         )
     # watermark must NOT have advanced
-    store = WatermarkStore(spark, state_dir)
+    store = WatermarkStore(state_dir)
     wm = store.read("pagila_weekly_rental_summary")
     assert wm < dt.datetime(1998, 1, 1)
 
@@ -205,7 +211,7 @@ def test_crash_at_any_boundary_converges(spark, rental, dirs, schedule):
 
 def test_watermark_store_default_and_roundtrip(spark, dirs):
     _, state_dir = dirs
-    store = WatermarkStore(spark, state_dir)
+    store = WatermarkStore(state_dir)
     assert store.read("anything") == DEFAULT_WATERMARK_START
     ts = dt.datetime(2001, 2, 3, 4, 5, 6)
     store.write("p1", ts)
@@ -213,3 +219,78 @@ def test_watermark_store_default_and_roundtrip(spark, dirs):
     store.write("p1", ts + dt.timedelta(days=1))  # upsert overwrites
     assert store.read("p1") == ts + dt.timedelta(days=1)
     assert store.read("p2") == dt.datetime(1999, 1, 1)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus, which lags the job
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_run_spark_job_budget(spark, rental, dirs):
+    """Spark does only the fact-table work: the probe aggregate, plus the
+    summary plan when weeks are dirty. The summary and watermark tables are
+    read and published in the driver, so they cost no Spark job."""
+    target_dir, state_dir = dirs
+    run_incremental(
+        spark, rental.where(F.col("last_update") <= F.lit(dt.datetime(1996, 1, 1))),
+        target_dir, state_dir,
+    )
+    grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1998, 1, 1)))
+    plan_jobs = _spark_jobs(spark, lambda: weekly_rental_summary(grown).collect())
+    reports = []
+    dirty_jobs = _spark_jobs(
+        spark, lambda: reports.append(run_incremental(spark, grown, target_dir, state_dir))
+    )
+    noop_jobs = _spark_jobs(
+        spark, lambda: reports.append(run_incremental(spark, grown, target_dir, state_dir))
+    )
+    assert [r.noop for r in reports] == [False, True]
+    assert dirty_jobs <= plan_jobs + 2
+    assert noop_jobs <= 2
+
+
+_UPSERT_CASES = {
+    # the summary's one-column key: the update wins, other keys survive
+    "one-key": (
+        ["k"],
+        pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]}),
+        pa.table({"k": [2, 4], "v": ["B", "d"]}),
+        [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
+    ),
+    # the streaming sink's two-column key: only full-key matches are replaced
+    "two-key": (
+        ["k", "j"],
+        pa.table({"k": [1, 1, 2], "j": ["x", "y", "x"], "v": ["a", "b", "c"]}),
+        pa.table({"k": [1, 2], "j": ["y", "y"], "v": ["B", "d"]}),
+        [(1, "x", "a"), (1, "y", "B"), (2, "x", "c"), (2, "y", "d")],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_UPSERT_CASES))
+def test_merge_upsert(spark, tmp_path, case):
+    """A keyed upsert leaves exactly one visible data file and no sibling
+    directories; a hidden temp file left by a crashed publish is invisible to
+    Spark and to pyarrow."""
+    key, base, updates, expected = _UPSERT_CASES[case]
+    target = str(tmp_path / "target")
+    assert merge_upsert(target, base, key) == base.num_rows
+    # a publish that crashed before its rename leaves a hidden temp file
+    pq.write_table(updates, os.path.join(target, ".tmp-crashed.parquet"))
+    assert merge_upsert(target, updates, key) == len(expected)
+
+    visible = [f for f in os.listdir(target) if not f.startswith(".")]
+    assert len(visible) == 1 and visible[0].endswith(".parquet")
+    assert os.listdir(tmp_path) == ["target"]
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == expected
+    got = pq.read_table(target).to_pylist()
+    assert sorted(tuple(r.values()) for r in got) == expected

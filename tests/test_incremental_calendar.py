@@ -30,7 +30,6 @@ import tempfile
 import pytest
 
 from pagila_etl_airflow_assignment_spark.incremental import run_incremental
-from pagila_etl_airflow_assignment_spark.incremental.upsert import read_parquet_table
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
     weekly_rental_summary,
 )
@@ -41,8 +40,7 @@ SPAN_DAYS = 4 * 364  # 208 ISO weeks
 
 
 def _target_rows(spark, target_dir):
-    df = read_parquet_table(spark, target_dir)
-    assert df is not None
+    df = spark.read.parquet(target_dir)
     return sorted(tuple(r) for r in df.drop("last_updated").collect())
 
 

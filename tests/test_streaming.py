@@ -183,9 +183,6 @@ def test_stream_merge_sink_equals_batch(spark, events_dir):
     effect from at-least-once delivery)."""
     import tempfile as _tf
 
-    from pagila_etl_airflow_assignment_spark.incremental.upsert import (
-        read_parquet_table,
-    )
     from pagila_etl_airflow_assignment_spark.streaming.sinks import (
         stream_merge_to_parquet,
     )
@@ -200,7 +197,7 @@ def test_stream_merge_sink_equals_batch(spark, events_dir):
     run_once()
     got1 = {
         (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in read_parquet_table(spark, target).collect()
+        for r in spark.read.parquet(target).collect()
     }
     expected = {
         (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
@@ -213,7 +210,7 @@ def test_stream_merge_sink_equals_batch(spark, events_dir):
     run_once()  # replay from a fresh checkpoint — merge must converge, not duplicate
     got2 = {
         (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in read_parquet_table(spark, target).collect()
+        for r in spark.read.parquet(target).collect()
     }
     assert got2 == expected
 
