@@ -28,6 +28,12 @@ DEFAULT_WATERMARK_START = dt.datetime(1900, 1, 1)
 _SCHEMA = to_arrow_schema(ETL_WATERMARKS)
 
 
+def naive_local(ts: dt.datetime) -> dt.datetime:
+    """A timestamp read through Arrow (tz-aware UTC) as the naive local
+    datetime Spark's ``collect()`` returns, so the two compare."""
+    return ts.astimezone().replace(tzinfo=None)
+
+
 class WatermarkStore:
     def __init__(self, state_dir: str):
         self.state_dir = state_dir
@@ -43,7 +49,7 @@ class WatermarkStore:
         ts = rows.get(process_name)
         if ts is None:
             return DEFAULT_WATERMARK_START
-        return ts.astimezone().replace(tzinfo=None)
+        return naive_local(ts)
 
     def write(self, process_name: str, ts: dt.datetime) -> None:
         """Upsert keyed by process_name (ON CONFLICT DO UPDATE analog,

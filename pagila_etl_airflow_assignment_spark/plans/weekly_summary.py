@@ -8,7 +8,7 @@ the SURVEY.md §2.X decisions baked in:
 - the nondeterministic CURRENT_DATE (ref.sql:7) is parameterized as ``as_of``;
   ``as_of=None`` means "max activity date in the data" for deterministic tests.
 
-Two implementations:
+Three implementations:
 
 ``weekly_rental_summary``      — idiomatic Spark: one scan for weekly counts, a
     broadcast-joined week spine, and outstanding-at-week-end as a cumulative
@@ -21,6 +21,14 @@ Two implementations:
     ref.sql:40-49 via spark.sql; Catalyst decorrelates it into a join+agg
     (SURVEY.md O-11). Kept for parity; a test asserts both forms agree.
 
+``week_pair_counts`` + ``weekly_summary_from_pairs`` — the incremental
+    runner's form: ONE fact-table aggregate, grouped by (rental week, return
+    week) and collected to the driver as Arrow, then summed in plain Python.
+    The pair table has at most weeks x return-lag-weeks rows whatever the
+    source size (518 rows for the benchmark's 200k-row source), and it also
+    carries what the runner needs besides the summary: per-pair counts of
+    rows changed since the watermark and the max ``last_update``.
+
 Why the cumulative window is equivalent to ref.sql's correlated count: for a
 spine week W with week_end = W+6d (a Sunday),
 
@@ -28,13 +36,19 @@ spine week W with week_end = W+6d (a Sunday),
     return_date::date  > week_end  <=>  date_trunc('week', return_date)  > W
 
 so  outstanding(W) = #{rented in weeks <= W} - #{returned in weeks <= W},
-i.e. cumsum(newly_rented) - cumsum(returned) along the spine.
+i.e. cumsum(newly_rented) - cumsum(returned) along the spine. The driver form
+takes the same prefix sum; since week truncation is monotone, its spine runs
+from min(rental week) to max(return week, or for an open rental
+max(rental week, week of ``as_of``)), exactly the all_weeks bounds.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
+from itertools import accumulate
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -131,6 +145,54 @@ def weekly_rental_summary(rental: DataFrame, as_of: dt.date | None = None) -> Da
             ).alias("outstanding_rentals_at_week_end"),
         )
         .orderBy("week_beginning")
+    )
+
+
+def week_pair_counts(rental: DataFrame, since: dt.datetime) -> pa.Table:
+    """The driver formulation's one fact-table aggregate, collected as Arrow:
+    a row per (rental week ``rw``, return week ``tw``) pair that occurs, with
+    its rental count ``n``, the count ``n_delta`` of its rows whose
+    ``last_update`` is after ``since`` and its ``max_lu``. ``tw`` is null for
+    open rentals."""
+    return (
+        rental.groupBy(_week("rental_date").alias("rw"), _week("return_date").alias("tw"))
+        .agg(
+            F.count("rental_id").alias("n"),
+            F.count_if(F.col("last_update") > F.lit(since)).alias("n_delta"),
+            F.max("last_update").alias("max_lu"),
+        )
+        .toArrow()
+    )
+
+
+def weekly_summary_from_pairs(pairs: pa.Table, as_of: dt.date | None = None) -> pa.Table:
+    """Full-recompute weekly summary, ref.sql semantics, summed in the driver
+    from ``week_pair_counts``: OUTPUT_COLUMNS, one row per spine week in order."""
+    rented: Counter[dt.date] = Counter()
+    returned: Counter[dt.date] = Counter()
+    # ref.sql:4-9: an open rental extends the spine to the week of as_of
+    open_end = as_of - dt.timedelta(days=as_of.weekday()) if as_of else dt.date.min
+    start = end = None
+    for rw, tw, n in zip(*(pairs[c].to_pylist() for c in ("rw", "tw", "n"))):
+        rented[rw] += n
+        if tw is not None:
+            returned[tw] += n
+        last = tw if tw is not None else max(rw, open_end)
+        start = rw if start is None else min(start, rw)
+        end = last if end is None else max(end, last)
+    weeks = []
+    while start is not None and start <= end:
+        weeks.append(start)
+        start += dt.timedelta(weeks=1)
+    new = [rented[w] for w in weeks]
+    ret = [returned[w] for w in weeks]
+    net = [a - b for a, b in zip(new, ret)]
+    return pa.table(
+        [
+            pa.array(weeks, pa.date32()),
+            *(pa.array(c, pa.int64()) for c in (new, ret, net, list(accumulate(net)))),
+        ],
+        names=OUTPUT_COLUMNS,
     )
 
 

@@ -6,15 +6,19 @@ import datetime as dt
 
 import pytest
 
+from pagila_etl_airflow_assignment_spark.incremental import DEFAULT_WATERMARK_START
 from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
 from pagila_etl_airflow_assignment_spark.sources.rental import (
     RENTAL_DUCKDB_SQL,
     rental_view,
 )
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
+    OUTPUT_COLUMNS,
     oracle_weekly_summary_sql,
+    week_pair_counts,
     weekly_rental_summary,
     weekly_rental_summary_sql,
+    weekly_summary_from_pairs,
 )
 
 from conftest import SF_SMALL, assert_matches_oracle
@@ -65,6 +69,28 @@ def test_window_form_equals_correlated_sql_form(spark, rental):
     a = weekly_rental_summary(rental).collect()
     b = weekly_rental_summary_sql(spark, rental).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+@pytest.mark.parametrize(
+    "as_of, empty",
+    [(None, False), (dt.date(1999, 6, 7), False), (None, True)],
+    ids=["as_of-none", "as_of-1999-06-07", "empty-source"],
+)
+def test_driver_form_equals_spark_and_oracle(spark, ddb, rental, as_of, empty):
+    """The driver formulation (one pair aggregate, summed in Python) equals
+    the window plan and the literal ref.sql oracle, row for row."""
+    src, rental_sql = rental, RENTAL_DUCKDB_SQL
+    if empty:
+        src = rental.where("false")
+        rental_sql = f"SELECT * FROM ({RENTAL_DUCKDB_SQL}) WHERE false"
+    pairs = week_pair_counts(src, since=DEFAULT_WATERMARK_START)
+    driver = weekly_summary_from_pairs(pairs, as_of=as_of)
+    assert driver.column_names == OUTPUT_COLUMNS
+    got = list(zip(*driver.to_pydict().values()))
+    assert got == [tuple(r) for r in weekly_rental_summary(src, as_of=as_of).collect()]
+    oracle = oracle_weekly_summary_sql(as_of=as_of).replace(RENTAL_DUCKDB_SQL, rental_sql)
+    assert got == ddb.sql(oracle).fetchall()
+    assert (len(got) == 0) == empty
 
 
 def test_weekly_summary_invariants(spark, rental):
