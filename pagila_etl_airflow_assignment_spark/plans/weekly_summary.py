@@ -8,38 +8,37 @@ the SURVEY.md §2.X decisions baked in:
 - the nondeterministic CURRENT_DATE (ref.sql:7) is parameterized as ``as_of``;
   ``as_of=None`` means "max activity date in the data" for deterministic tests.
 
-Three implementations:
+Two Spark-side formulations:
 
-``weekly_rental_summary``      — idiomatic Spark: one scan for weekly counts, a
-    broadcast-joined week spine, and outstanding-at-week-end as a cumulative
-    window (SURVEY.md C-2 Option 2) — O(n + weeks) instead of the reference's
-    O(weeks x n) correlated rescan (etl_script_incremental_pandas.py:218-243).
-    At 100 TB the heavy work is two partial+final hash aggregations over the
-    fact table; the window runs over the tiny week spine only.
+``weekly_rental_summary`` = ``week_pair_counts`` + ``weekly_summary_from_pairs``
+    — the driver form, shared by the full recompute and the incremental
+    runner: ONE fact-table aggregate, grouped by (rental week, return week)
+    and collected to the driver as Arrow, then summed in plain Python. The
+    pair table has at most weeks x return-lag-weeks rows whatever the source
+    size (518 rows for the benchmark's 200k-row source), so the summation is
+    O(pairs + weeks) instead of the reference's O(weeks x n) correlated
+    rescan (etl_script_incremental_pandas.py:218-243). With a ``since`` the
+    same aggregate also carries what the runner needs besides the summary:
+    per-pair counts of rows changed since the watermark and the max
+    ``last_update``. ``weekly_rental_summary`` is eager: it runs the aggregate
+    when called and returns a local relation.
 
 ``weekly_rental_summary_sql``  — the literal correlated-subquery form of
     ref.sql:40-49 via spark.sql; Catalyst decorrelates it into a join+agg
-    (SURVEY.md O-11). Kept for parity; a test asserts both forms agree.
+    (SURVEY.md O-11). It shares no code with the driver form, so tests use
+    it as the independent Spark formulation.
 
-``week_pair_counts`` + ``weekly_summary_from_pairs`` — the incremental
-    runner's form: ONE fact-table aggregate, grouped by (rental week, return
-    week) and collected to the driver as Arrow, then summed in plain Python.
-    The pair table has at most weeks x return-lag-weeks rows whatever the
-    source size (518 rows for the benchmark's 200k-row source), and it also
-    carries what the runner needs besides the summary: per-pair counts of
-    rows changed since the watermark and the max ``last_update``.
-
-Why the cumulative window is equivalent to ref.sql's correlated count: for a
-spine week W with week_end = W+6d (a Sunday),
+Why the driver form's prefix sum is equivalent to ref.sql's correlated
+count: for a spine week W with week_end = W+6d (a Sunday),
 
     rental_date::date <= week_end  <=>  date_trunc('week', rental_date) <= W
     return_date::date  > week_end  <=>  date_trunc('week', return_date)  > W
 
 so  outstanding(W) = #{rented in weeks <= W} - #{returned in weeks <= W},
-i.e. cumsum(newly_rented) - cumsum(returned) along the spine. The driver form
-takes the same prefix sum; since week truncation is monotone, its spine runs
-from min(rental week) to max(return week, or for an open rental
-max(rental week, week of ``as_of``)), exactly the all_weeks bounds.
+i.e. cumsum(newly_rented) - cumsum(returned) along the spine. Since week
+truncation is monotone, the spine runs from min(rental week) to max(return
+week, or for an open rental max(rental week, week of ``as_of``)), exactly the
+all_weeks bounds.
 """
 
 from __future__ import annotations
@@ -49,8 +48,9 @@ from collections import Counter
 from itertools import accumulate
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, LongType, StructField, StructType
 
 from ..sources.rental import RENTAL_DUCKDB_SQL
 
@@ -61,6 +61,11 @@ OUTPUT_COLUMNS = [
     "net_change_in_outstanding",
     "outstanding_rentals_at_week_end",
 ]
+# Declared, not inferred from Arrow, so an empty source keeps the types.
+OUTPUT_SCHEMA = StructType(
+    [StructField(OUTPUT_COLUMNS[0], DateType(), False)]
+    + [StructField(c, LongType(), False) for c in OUTPUT_COLUMNS[1:]]
+)
 
 
 def _week(col) -> F.Column:
@@ -97,70 +102,21 @@ def week_spine(rental: DataFrame, as_of: dt.date | None = None) -> DataFrame:
     )
 
 
-def weekly_rental_summary(rental: DataFrame, as_of: dt.date | None = None) -> DataFrame:
-    """Full-recompute weekly summary, ref.sql semantics, window formulation."""
-    rented = rental.groupBy(_week("rental_date").alias("week_beginning")).agg(
-        F.count("rental_id").alias("rented_cnt")
-    )
-    returned = (
-        rental.where(F.col("return_date").isNotNull())
-        .groupBy(_week("return_date").alias("week_beginning"))
-        .agg(F.count("rental_id").alias("returned_cnt"))
-    )
-    spine = week_spine(rental, as_of)
-
-    # Both count sides are <= one row per week — broadcast joins under AQE; the
-    # spine is the build side of nothing heavy.
-    joined = (
-        spine.join(rented, "week_beginning", "left")
-        .join(returned, "week_beginning", "left")
-        .select(
-            "week_beginning",
-            F.coalesce("rented_cnt", F.lit(0).cast("long")).alias(
-                "newly_rented_during_week"
-            ),
-            F.coalesce("returned_cnt", F.lit(0).cast("long")).alias(
-                "returned_rentals_during_week"
-            ),
-        )
-    )
-
-    # Unpartitioned window is fine: it runs over the week spine only (one row
-    # per week — thousands of rows even for decades of data), never the fact table.
-    cum = Window.orderBy("week_beginning").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        joined.select(
-            "week_beginning",
-            "newly_rented_during_week",
-            "returned_rentals_during_week",
-            (
-                F.col("newly_rented_during_week")
-                - F.col("returned_rentals_during_week")
-            ).alias("net_change_in_outstanding"),
-            (
-                F.sum("newly_rented_during_week").over(cum)
-                - F.sum("returned_rentals_during_week").over(cum)
-            ).alias("outstanding_rentals_at_week_end"),
-        )
-        .orderBy("week_beginning")
-    )
-
-
-def week_pair_counts(rental: DataFrame, since: dt.datetime) -> pa.Table:
+def week_pair_counts(rental: DataFrame, since: dt.datetime | None = None) -> pa.Table:
     """The driver formulation's one fact-table aggregate, collected as Arrow:
     a row per (rental week ``rw``, return week ``tw``) pair that occurs, with
-    its rental count ``n``, the count ``n_delta`` of its rows whose
-    ``last_update`` is after ``since`` and its ``max_lu``. ``tw`` is null for
-    open rentals."""
-    return (
-        rental.groupBy(_week("rental_date").alias("rw"), _week("return_date").alias("tw"))
-        .agg(
-            F.count("rental_id").alias("n"),
+    its rental count ``n``. ``tw`` is null for open rentals. With a ``since``,
+    each pair also carries the count ``n_delta`` of its rows whose
+    ``last_update`` is after ``since`` and its ``max_lu``."""
+    aggs = [F.count("rental_id").alias("n")]
+    if since is not None:
+        aggs += [
             F.count_if(F.col("last_update") > F.lit(since)).alias("n_delta"),
             F.max("last_update").alias("max_lu"),
-        )
+        ]
+    return (
+        rental.groupBy(_week("rental_date").alias("rw"), _week("return_date").alias("tw"))
+        .agg(*aggs)
         .toArrow()
     )
 
@@ -194,6 +150,17 @@ def weekly_summary_from_pairs(pairs: pa.Table, as_of: dt.date | None = None) -> 
         ],
         names=OUTPUT_COLUMNS,
     )
+
+
+def weekly_rental_summary(rental: DataFrame, as_of: dt.date | None = None) -> DataFrame:
+    """Full-recompute weekly summary, ref.sql semantics, driver form: one
+    pair aggregate summed by ``weekly_summary_from_pairs``.
+
+    Eager: the aggregate runs when this is called, and the result is a local
+    relation of OUTPUT_SCHEMA, one row per spine week in order. A later
+    ``collect()``, ``count()`` or ``show()`` does not rescan ``rental``."""
+    summary = weekly_summary_from_pairs(week_pair_counts(rental), as_of=as_of)
+    return rental.sparkSession.createDataFrame(summary, schema=OUTPUT_SCHEMA)
 
 
 def weekly_rental_summary_sql(spark, rental: DataFrame, as_of: dt.date | None = None) -> DataFrame:
@@ -259,7 +226,7 @@ def weekly_rental_summary_sql(spark, rental: DataFrame, as_of: dt.date | None = 
 def oracle_weekly_summary_sql(as_of: dt.date | None = None) -> str:
     """DuckDB oracle: ref.sql:1-57 nearly verbatim (correlated subquery and all)
     over the deterministic rental derivation — an independent formulation from
-    the Spark window plan, which is what makes the differential test strong.
+    the driver form, which is what makes the differential test strong.
     """
     open_expr = (
         f"GREATEST(CAST(rental_date AS DATE), DATE '{as_of.isoformat()}')"

@@ -112,10 +112,10 @@ def _quiet_known_benign_warnings(spark: SparkSession) -> None:
     """Raise the log level of WindowExec only.
 
     Every unpartitioned window in the engine runs over a spine/aggregate
-    relation that is tiny BY CONSTRUCTION (the week spine is one row per week —
-    plans/weekly_summary.py:114-118), yet WindowExec logs a per-query "No
-    Partition Defined ... serious performance degradation" warning that buries
-    real warnings in bench/verify logs. Fact-table windows in this engine are
+    relation that is tiny BY CONSTRUCTION (e.g. a week spine, one row per
+    week), yet WindowExec logs a per-query "No Partition Defined ... serious
+    performance degradation" warning that buries real warnings in
+    bench/verify logs. Fact-table windows in this engine are
     always partitioned (pinned by tests/test_plans.py), so silencing this one
     logger hides no genuine scale hazard."""
     try:

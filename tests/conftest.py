@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -104,3 +105,17 @@ def assert_matches_oracle(spark_df, ddb_con, oracle_sql, check_colnames=True):
     _, dn = normalize_rows(d_cols, d_rows)
     for i, (a, b) in enumerate(zip(sn, dn)):
         assert a == b, f"first differing row #{i}:\n  spark : {a}\n  duckdb: {b}"
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs that ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus, which lags the job
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))

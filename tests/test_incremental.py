@@ -18,7 +18,6 @@ import datetime as dt
 import os
 import shutil
 import tempfile
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,13 +31,13 @@ from pagila_etl_airflow_assignment_spark.incremental import (
 )
 from pagila_etl_airflow_assignment_spark.incremental.upsert import merge_upsert
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
-    weekly_rental_summary,
+    weekly_rental_summary_sql,
 )
 from pagila_etl_airflow_assignment_spark.schemas import RENTAL
 from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
 from pagila_etl_airflow_assignment_spark.sources.rental import rental_view
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -62,6 +61,9 @@ def _target_rows(spark, target_dir):
 
 
 def _full_recompute_rows(rental_df, as_of=None):
+    """The full recompute in the literal correlated-SQL form, which shares no
+    code with the runner's driver-side summation."""
+    spark = rental_df.sparkSession
     return sorted(
         (
             r.week_beginning,
@@ -70,7 +72,7 @@ def _full_recompute_rows(rental_df, as_of=None):
             r.newly_rented_during_week,
             r.net_change_in_outstanding,
         )
-        for r in weekly_rental_summary(rental_df, as_of=as_of).collect()
+        for r in weekly_rental_summary_sql(spark, rental_df, as_of=as_of).collect()
     )
 
 
@@ -245,20 +247,6 @@ def test_watermark_store_default_and_roundtrip(spark, dirs):
     assert store.read("p2") == dt.datetime(1999, 1, 1)
 
 
-def _spark_jobs(spark, fn) -> int:
-    """Spark jobs that ``fn`` runs, counted through a job group."""
-    sc = spark.sparkContext
-    gid = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, gid)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed by the listener bus, which lags the job
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def test_run_spark_job_budget(spark, rental, dirs):
     """Spark does only the fact-table work, one aggregate per run whether
     weeks are dirty or not. The summary is summed and both small tables are
@@ -270,10 +258,10 @@ def test_run_spark_job_budget(spark, rental, dirs):
     )
     grown = rental.where(F.col("last_update") <= F.lit(dt.datetime(1998, 1, 1)))
     reports = []
-    dirty_jobs = _spark_jobs(
+    dirty_jobs = spark_jobs(
         spark, lambda: reports.append(run_incremental(spark, grown, target_dir, state_dir))
     )
-    noop_jobs = _spark_jobs(
+    noop_jobs = spark_jobs(
         spark, lambda: reports.append(run_incremental(spark, grown, target_dir, state_dir))
     )
     assert [r.noop for r in reports] == [False, True]

@@ -31,7 +31,7 @@ import pytest
 
 from pagila_etl_airflow_assignment_spark.incremental import run_incremental
 from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
-    weekly_rental_summary,
+    weekly_rental_summary_sql,
 )
 from pagila_etl_airflow_assignment_spark.schemas import RENTAL
 
@@ -45,7 +45,8 @@ def _target_rows(spark, target_dir):
 
 
 def _full_rows(spark, rows):
-    df = weekly_rental_summary(spark.createDataFrame(rows, schema=RENTAL))
+    """Full recompute in the correlated-SQL form, independent of the runner."""
+    df = weekly_rental_summary_sql(spark, spark.createDataFrame(rows, schema=RENTAL))
     return sorted(
         (
             r.week_beginning,

@@ -12,11 +12,14 @@ import re
 from pyspark.sql import functions as F
 
 from pagila_etl_airflow_assignment_spark import queries as _q  # registers
+from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
+    weekly_rental_summary,
+)
 from pagila_etl_airflow_assignment_spark.registry import queries
 from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
 from pagila_etl_airflow_assignment_spark.sources.rental import load_rental
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, spark_jobs
 
 
 def final_plan(df) -> str:
@@ -47,12 +50,11 @@ def test_delta_scan_keeps_projection_narrow(spark):
     ]
 
 
-def test_weekly_summary_joins_are_broadcast(spark):
-    """Spine/counts joins are tiny-side joins: the final adaptive plan must use
-    broadcast hash joins, never a sort-merge shuffle."""
-    plan = final_plan(queries()["weekly_rental_summary"](spark, SF_SMALL))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+def test_weekly_summary_spark_job_budget(spark):
+    """The full recompute is one pair aggregate summed in the driver: no
+    spine, join or window jobs, and reading the local result rescans nothing."""
+    rental = load_rental(spark, SF_SMALL)
+    assert spark_jobs(spark, lambda: weekly_rental_summary(rental).collect()) <= 2
 
 
 def test_text_pipelines_have_no_shuffle(spark):

@@ -65,7 +65,8 @@ def test_weekly_summary_with_as_of_matches_oracle(spark, ddb, rental):
 
 
 def test_window_form_equals_correlated_sql_form(spark, rental):
-    """SURVEY.md §7 step 4: both Spark forms must produce identical rows."""
+    """SURVEY.md §7 step 4: both Spark forms (driver pair sum and correlated
+    SQL) must produce identical rows."""
     a = weekly_rental_summary(rental).collect()
     b = weekly_rental_summary_sql(spark, rental).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
@@ -77,8 +78,9 @@ def test_window_form_equals_correlated_sql_form(spark, rental):
     ids=["as_of-none", "as_of-1999-06-07", "empty-source"],
 )
 def test_driver_form_equals_spark_and_oracle(spark, ddb, rental, as_of, empty):
-    """The driver formulation (one pair aggregate, summed in Python) equals
-    the window plan and the literal ref.sql oracle, row for row."""
+    """The driver formulation with a watermark (the runner's aggregate,
+    summed in Python) equals the correlated Spark SQL form and the literal
+    ref.sql oracle, row for row."""
     src, rental_sql = rental, RENTAL_DUCKDB_SQL
     if empty:
         src = rental.where("false")
@@ -87,10 +89,23 @@ def test_driver_form_equals_spark_and_oracle(spark, ddb, rental, as_of, empty):
     driver = weekly_summary_from_pairs(pairs, as_of=as_of)
     assert driver.column_names == OUTPUT_COLUMNS
     got = list(zip(*driver.to_pydict().values()))
-    assert got == [tuple(r) for r in weekly_rental_summary(src, as_of=as_of).collect()]
+    sql = weekly_rental_summary_sql(spark, src, as_of=as_of)
+    assert got == [tuple(r) for r in sql.collect()]
     oracle = oracle_weekly_summary_sql(as_of=as_of).replace(RENTAL_DUCKDB_SQL, rental_sql)
     assert got == ddb.sql(oracle).fetchall()
     assert (len(got) == 0) == empty
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["source", "empty-source"])
+def test_weekly_summary_schema(spark, rental, empty):
+    """The summary keeps its column names and Spark types, also when the
+    source is empty and there is no data to infer them from."""
+    src = rental.where("false") if empty else rental
+    df = weekly_rental_summary(src)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == list(
+        zip(OUTPUT_COLUMNS, ["date", "bigint", "bigint", "bigint", "bigint"])
+    )
+    assert (df.count() == 0) == empty
 
 
 def test_weekly_summary_invariants(spark, rental):

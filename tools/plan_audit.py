@@ -51,12 +51,9 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 # aggregate or a provably tiny constant relation (see the query's docstring).
 ALLOWED: dict[str, set[str]] = {
     # spine bounds / corpus scalars: crossJoin(broadcast(1-row agg))
-    "weekly_rental_summary": {"BroadcastNestedLoopJoin"},
-    "weekly_rental_summary_as_of": {"BroadcastNestedLoopJoin"},
     "weekly_rental_summary_correlated": {"BroadcastNestedLoopJoin"},
     "incremental_weekly_summary": {"BroadcastNestedLoopJoin"},
     "h3_week_spine": {"BroadcastNestedLoopJoin"},
-    "weekly_summary_monthly_rollup": {"BroadcastNestedLoopJoin"},
     # broadcast corpus-size / df scalars
     "text_tfidf_topk": {"BroadcastNestedLoopJoin"},
     "text_unigram_logprob": {"BroadcastNestedLoopJoin"},
