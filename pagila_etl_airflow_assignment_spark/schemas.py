@@ -1,9 +1,16 @@
 """Explicit StructType schemas for every table the engine touches.
 
-Fixed, DDL-style schemas (no inference), mirroring the reference's
-create-if-not-exists DDL strings (etl_script_incremental_pandas.py:43-66) and the
-four columns its delta query reads (etl_script_incremental_pandas.py:121);
-SURVEY.md §1.3.
+Fixed, DDL-style schemas, mirroring the reference's create-if-not-exists DDL
+strings (etl_script_incremental_pandas.py:43-66) and the four columns its delta
+query reads (etl_script_incremental_pandas.py:121); SURVEY.md §1.3.
+
+``SOURCE_SCHEMAS`` maps each parquet source with a fixed encoding to the
+schema ``sources.parquet.load_table`` reads it with, so no read runs Spark's
+schema-inference job. Each fixture declaration is the schema Spark infers from
+the files, proven per sf dir by
+``tests/test_encoding_contract.py::test_declared_schema_matches_files``; ``events``
+has no entry because its timestamp encoding varies (see
+``sources.parquet.normalize_event_ts``).
 """
 
 from __future__ import annotations
@@ -18,6 +25,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -56,6 +64,23 @@ ETL_WATERMARKS = StructType(
 )
 
 # --- driver fixture tables (/root/testdata, TESTDATA.md) ----------------------
+# Fixture timestamps are parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
+# which Spark reads as TIMESTAMP_NTZ.
+
+REGION = StructType(
+    [
+        StructField("r_regionkey", IntegerType()),
+        StructField("r_name", StringType()),
+    ]
+)
+
+NATION = StructType(
+    [
+        StructField("n_nationkey", IntegerType()),
+        StructField("n_name", StringType()),
+        StructField("n_regionkey", IntegerType()),
+    ]
+)
 
 CUSTOMER = StructType(
     [
@@ -67,13 +92,33 @@ CUSTOMER = StructType(
     ]
 )
 
+SUPPLIER = StructType(
+    [
+        StructField("s_suppkey", LongType()),
+        StructField("s_name", StringType()),
+        StructField("s_nationkey", IntegerType()),
+        StructField("s_acctbal", DoubleType()),
+    ]
+)
+
+PART = StructType(
+    [
+        StructField("p_partkey", LongType()),
+        StructField("p_name", StringType()),
+        StructField("p_brand", StringType()),
+        StructField("p_type", StringType()),
+        StructField("p_size", IntegerType()),
+        StructField("p_retailprice", DoubleType()),
+    ]
+)
+
 ORDERS = StructType(
     [
         StructField("o_orderkey", LongType()),
         StructField("o_custkey", LongType()),
         StructField("o_orderstatus", StringType()),
         StructField("o_totalprice", DoubleType()),
-        StructField("o_orderdate", TimestampType()),
+        StructField("o_orderdate", TimestampNTZType()),
         StructField("o_orderpriority", StringType()),
     ]
 )
@@ -90,7 +135,7 @@ LINEITEM = StructType(
         StructField("l_tax", DoubleType()),
         StructField("l_returnflag", StringType()),
         StructField("l_linestatus", StringType()),
-        StructField("l_shipdate", TimestampType()),
+        StructField("l_shipdate", TimestampNTZType()),
     ]
 )
 
@@ -112,27 +157,12 @@ EMBEDDINGS = StructType(
     ]
 )
 
+# The shape ``load_table`` returns for ``events`` after normalize_event_ts;
+# not a read schema, since the on-disk ``ts`` encoding varies.
 EVENTS = StructType(
     [
         StructField("event_id", LongType()),
         StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-# On-disk form for the LEGACY nanos-era fixture only: parquet TIMESTAMP(NANOS)
-# read as raw long nanos (session.py nanosAsLong). The fixture encoding has
-# changed between rounds (nanos -> micros-NTZ), so NOTHING should hardcode
-# this schema for reads — streaming uses sources.parquet.events_stream, which
-# probes the real file schema and normalizes via normalize_event_ts. Kept for
-# tests that synthesize old-encoding files.
-EVENTS_RAW = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
         StructField("user_id", LongType()),
         StructField("event_type", StringType()),
         StructField("value", DoubleType()),
@@ -152,3 +182,18 @@ FIXTURE_TABLES = (
     "documents",
     "embeddings",
 )
+
+# Read schemas for load_table: the ETL source contract plus every fixture table
+# but ``events``.
+SOURCE_SCHEMAS: dict[str, StructType] = {
+    "rental": RENTAL,
+    "region": REGION,
+    "nation": NATION,
+    "customer": CUSTOMER,
+    "supplier": SUPPLIER,
+    "part": PART,
+    "orders": ORDERS,
+    "lineitem": LINEITEM,
+    "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}

@@ -3,6 +3,13 @@
 Declarative `spark.read.parquet` scans so Catalyst gets predicate pushdown,
 column pruning, and row-group skipping for free (SURVEY.md O-1/O-2). At 100 TB
 the same call reads a partitioned lake path; nothing here assumes local files.
+
+Every source with a fixed encoding (`rental` and every fixture table but
+`events`) is read with its declared schema from `schemas.SOURCE_SCHEMAS`, so
+the read runs no Spark job: an undeclared parquet read starts a schema-inference
+job that re-reads file footers on every call. `events` is the one inferred
+read, because its timestamp encoding varies and `normalize_event_ts` branches
+on the inferred type.
 """
 
 from __future__ import annotations
@@ -11,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import FIXTURE_TABLES
+from ..schemas import FIXTURE_TABLES, SOURCE_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -44,7 +51,14 @@ def ensure_read_confs(spark: SparkSession) -> None:
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, parallelize: bool = False
 ) -> DataFrame:
-    """Load one fixture table (TESTDATA.md) as a DataFrame.
+    """Load one fixture table (TESTDATA.md) or the ``rental`` source as a
+    DataFrame.
+
+    A table named in ``schemas.SOURCE_SCHEMAS`` is read with that schema, so
+    the read itself makes no Spark job; a file whose column types differ fails
+    when scanned (e.g. PARQUET_COLUMN_DATA_TYPE_MISMATCH for a nanos-encoded
+    rental) instead of returning other types. Any other name, ``events``
+    included, is read with an inferred schema (one small Spark job per call).
 
     ``parallelize=True`` is the unsplittable-input fix (optimization guide
     §2.5 "one huge unsplittable file ... repartition immediately after the
@@ -63,7 +77,9 @@ def load_table(
     splits >= cores) it is a no-op and no payload shuffle is added.
     """
     ensure_read_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    schema = SOURCE_SCHEMAS.get(name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     if parallelize:

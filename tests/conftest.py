@@ -23,6 +23,15 @@ from pagila_etl_airflow_assignment_spark.session import build_session
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
+# Threads for the tests that build or count every registered query in one
+# session. At fixture scale a query is mostly driver-side latency (planning,
+# py4j, job scheduling), so running a few at once halves the pass. The
+# queries share only the session: the temp views some register under fixed
+# names are either fixture views of the same sf dir (same data whichever
+# query wins) or owned by a single registered query (``rental``,
+# ``__udtf_docs``), and ``spark.sql`` resolves a view when it is called.
+CATALOG_WORKERS = 4
+
 
 def pytest_collection_modifyitems(config, items):
     """Default to the fast profile: deselect tests marked ``slow`` unless
@@ -89,8 +98,17 @@ def normalize_rows(cols, rows):
 
 def assert_matches_oracle(spark_df, ddb_con, oracle_sql, check_colnames=True):
     """Differential assertion: Spark DataFrame ≡ DuckDB oracle result."""
-    s_cols = spark_df.columns
-    s_rows = [tuple(r) for r in spark_df.collect()]
+    assert_rows_match_oracle(
+        spark_df.columns,
+        [tuple(r) for r in spark_df.collect()],
+        ddb_con,
+        oracle_sql,
+        check_colnames,
+    )
+
+
+def assert_rows_match_oracle(s_cols, s_rows, ddb_con, oracle_sql, check_colnames=True):
+    """``assert_matches_oracle`` for a Spark result already collected."""
     rel = ddb_con.sql(oracle_sql)
     d_cols = list(rel.columns)
     d_rows = [tuple(r) for r in rel.fetchall()]

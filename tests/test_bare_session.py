@@ -14,9 +14,13 @@ session's runtime confs to the bare defaults, then running the full registry.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from pagila_etl_airflow_assignment_spark.registry import queries
+
+from conftest import CATALOG_WORKERS
 
 SF = "/root/testdata/sf0.001"
 
@@ -53,8 +57,8 @@ def bare_spark(spark):
 
 
 def test_all_registered_queries_execute_on_bare_session(bare_spark):
-    failures = {}
-    for name, fn in queries().items():
+    def run(item):
+        name, fn = item
         # re-impose bareness each round: load_table self-heals nanos/tz, which
         # is exactly the behavior under test, but ANSI must stay on throughout
         bare_spark.conf.set("spark.sql.ansi.enabled", "true")
@@ -62,7 +66,12 @@ def test_all_registered_queries_execute_on_bare_session(bare_spark):
             n = fn(bare_spark, SF).count()
             assert n >= 0
         except Exception as e:  # collect all failures, report once
-            failures[name] = f"{type(e).__name__}: {str(e)[:300]}"
+            return name, f"{type(e).__name__}: {str(e)[:300]}"
+        return name, None
+
+    # a few queries at a time (see conftest.CATALOG_WORKERS)
+    with ThreadPoolExecutor(CATALOG_WORKERS) as pool:
+        failures = {n: err for n, err in pool.map(run, queries().items()) if err}
     assert not failures, f"queries failing under a bare driver session: {failures}"
 
 

@@ -7,13 +7,21 @@ repeats at sf0.01 to catch scale-dependent divergence.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 from pagila_etl_airflow_assignment_spark.schemas import FIXTURE_TABLES
 
-from conftest import SF_MEDIUM, SF_SMALL, assert_matches_oracle
+from conftest import (
+    CATALOG_WORKERS,
+    SF_MEDIUM,
+    SF_SMALL,
+    assert_matches_oracle,
+    assert_rows_match_oracle,
+)
 
 
 def _ddb_for(sf_dir):
@@ -31,14 +39,35 @@ def _all_cases():
     return [(name, q[name], o.get(name)) for name in sorted(q)]
 
 
+@pytest.fixture(scope="module")
+def sf0001_results(spark):
+    """Every query's collected Spark result at sf0.001, ``(columns, rows)``, or
+    the exception it raised; a few queries run at a time
+    (conftest.CATALOG_WORKERS) and each oracle test checks its own entry."""
+
+    def run(item):
+        name, fn = item
+        try:
+            df = fn(spark, SF_SMALL)
+            return name, (df.columns, [tuple(r) for r in df.collect()])
+        except Exception as e:
+            return name, e
+
+    with ThreadPoolExecutor(CATALOG_WORKERS) as pool:
+        return dict(pool.map(run, entrymod.queries().items()))
+
+
 @pytest.mark.parametrize("name,fn,oracle", _all_cases(), ids=[c[0] for c in _all_cases()])
-def test_query_matches_oracle_sf0001(spark, ddb, name, fn, oracle):
-    df = fn(spark, SF_SMALL)
+def test_query_matches_oracle_sf0001(sf0001_results, ddb, name, fn, oracle):
+    result = sf0001_results[name]
+    if isinstance(result, Exception):
+        raise result
+    cols, rows = result
     if oracle is None:
         # driver records a weaker rows-only check for these
-        assert df.count() >= 0
+        assert len(rows) >= 0
         return
-    assert_matches_oracle(df, ddb, oracle)
+    assert_rows_match_oracle(cols, rows, ddb, oracle)
 
 
 def test_entry_smoke(spark):
@@ -55,16 +84,18 @@ def test_no_complex_types_in_certified_outputs(spark):
     This walks all registered output schemas so the class can't recur."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    offenders = {}
-    for name, fn in entrymod.queries().items():
+    def complex_columns(item):
+        name, fn = item
         schema = fn(spark, SF_SMALL).schema
-        bad = [
+        return name, [
             f.name
             for f in schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
-        if bad:
-            offenders[name] = bad
+
+    with ThreadPoolExecutor(CATALOG_WORKERS) as pool:
+        found = pool.map(complex_columns, entrymod.queries().items())
+        offenders = {name: bad for name, bad in found if bad}
     assert not offenders, (
         f"complex-typed output columns would crash the driver hasher: {offenders}"
     )

@@ -8,6 +8,8 @@ is what catches the next flip before the driver does."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
 import shutil
 import tempfile
 
@@ -15,11 +17,20 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
+from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
+    weekly_rental_summary,
+)
+from pagila_etl_airflow_assignment_spark.schemas import FIXTURE_TABLES, SOURCE_SCHEMAS
+from pagila_etl_airflow_assignment_spark.sources.parquet import (
+    ensure_read_confs,
+    load_table,
+)
 from pagila_etl_airflow_assignment_spark.streaming.aggregations import (
     hourly_event_counts,
     streaming_hourly_event_counts,
 )
+
+from conftest import SF_SMALL
 
 ENCODINGS = ("nanos", "micros_ntz", "micros_utc")
 
@@ -112,3 +123,90 @@ def test_streaming_query_identical_across_encodings(spark, encoded_dirs):
     assert len(want) > 0
     for name in ENCODINGS:
         assert outs[name] == want, f"{name} streaming result diverges"
+
+
+# Every other source is read with a declared schema (schemas.SOURCE_SCHEMAS):
+# each fixture declaration must equal what Spark infers from the files, and the
+# rental source accepts both micros encodings but rejects nanos.
+DECLARED_FIXTURES = [t for t in FIXTURE_TABLES if t in SOURCE_SCHEMAS]
+SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
+
+
+@pytest.mark.parametrize("table", DECLARED_FIXTURES)
+@pytest.mark.parametrize("sf_dir", SF_DIRS, ids=os.path.basename)
+def test_declared_schema_matches_files(spark, sf_dir, table):
+    """A declared read must return exactly the types inference would: same
+    names, order and types (nullability aside, since file reads are always
+    nullable)."""
+    ensure_read_confs(spark)
+    inferred = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    shape = lambda schema: [(f.name, f.dataType.simpleString()) for f in schema.fields]
+    assert shape(SOURCE_SCHEMAS[table]) == shape(inferred)
+
+
+def _rental_arrow(ts_type: pa.DataType) -> pa.Table:
+    """Six rentals over three weeks: a Monday 00:00 and a Sunday 23:59:59
+    boundary, an open rental and a same-week return."""
+    t = lambda *a: dt.datetime(2024, 1, *a)
+    rental_date = [t(1), t(3, 12), t(7, 23, 59, 59), t(9, 8), t(15), t(16, 1)]
+    return_date = [t(2), None, t(8), t(20, 6), t(21, 23, 59, 59), None]
+    last_update = [r or d for d, r in zip(rental_date, return_date)]
+    return pa.table(
+        {
+            "rental_id": pa.array(range(1, 7), pa.int64()),
+            "rental_date": pa.array(rental_date, ts_type),
+            "return_date": pa.array(return_date, ts_type),
+            "last_update": pa.array(last_update, ts_type),
+        }
+    )
+
+
+RENTAL_ENCODINGS = {
+    "micros_utc": pa.timestamp("us", tz="UTC"),
+    "micros_ntz": pa.timestamp("us"),
+    "nanos": pa.timestamp("ns"),
+}
+
+
+@pytest.fixture(scope="module")
+def rental_dirs():
+    dirs = {}
+    for name, ts_type in RENTAL_ENCODINGS.items():
+        d = tempfile.mkdtemp(prefix=f"rental-{name}-")
+        pq.write_table(_rental_arrow(ts_type), f"{d}/rental.parquet", version="2.6")
+        dirs[name] = d
+    yield dirs
+    for d in dirs.values():
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_rental_micros_encodings_load_identically(spark, rental_dirs):
+    rows, summaries = {}, {}
+    for name in ("micros_utc", "micros_ntz"):
+        df = load_table(spark, rental_dirs[name], "rental")
+        assert df.dtypes == [
+            ("rental_id", "bigint"),
+            ("rental_date", "timestamp"),
+            ("return_date", "timestamp"),
+            ("last_update", "timestamp"),
+        ], name
+        rows[name] = sorted(tuple(r) for r in df.collect())
+        summaries[name] = [
+            tuple(r) for r in weekly_rental_summary(df, as_of=dt.date(2024, 1, 24)).collect()
+        ]
+    assert rows["micros_ntz"][0][1] == dt.datetime(2024, 1, 1), "instants shifted"
+    assert rows["micros_ntz"] == rows["micros_utc"]
+    assert summaries["micros_ntz"] == summaries["micros_utc"]
+    assert [r[0] for r in summaries["micros_ntz"]] == [
+        dt.date(2024, 1, 1),
+        dt.date(2024, 1, 8),
+        dt.date(2024, 1, 15),
+        dt.date(2024, 1, 22),
+    ]
+
+
+def test_rental_nanos_encoding_is_rejected(spark, rental_dirs):
+    """Inference would read nanos as bigint and the summary would silently
+    bucket epoch nanoseconds; the declared read fails on the scan instead."""
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        load_table(spark, rental_dirs["nanos"], "rental").collect()

@@ -16,6 +16,7 @@ from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
     weekly_rental_summary,
 )
 from pagila_etl_airflow_assignment_spark.registry import queries
+from pagila_etl_airflow_assignment_spark.schemas import FIXTURE_TABLES, SOURCE_SCHEMAS
 from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
 from pagila_etl_airflow_assignment_spark.sources.rental import load_rental
 
@@ -52,9 +53,20 @@ def test_delta_scan_keeps_projection_narrow(spark):
 
 def test_weekly_summary_spark_job_budget(spark):
     """The full recompute is one pair aggregate summed in the driver: no
-    spine, join or window jobs, and reading the local result rescans nothing."""
+    spine, join or window jobs, and reading the local result rescans nothing.
+    The declared source read adds no job, so the budget holds with the read
+    inside the group too."""
     rental = load_rental(spark, SF_SMALL)
     assert spark_jobs(spark, lambda: weekly_rental_summary(rental).collect()) <= 2
+    with_read = lambda: weekly_rental_summary(load_rental(spark, SF_SMALL)).collect()
+    assert spark_jobs(spark, with_read) <= 2
+
+
+def test_declared_reads_make_no_spark_job(spark):
+    """A read with a declared schema skips Spark's schema-inference job."""
+    for t in FIXTURE_TABLES:
+        if t in SOURCE_SCHEMAS:
+            assert spark_jobs(spark, lambda: load_table(spark, SF_SMALL, t)) == 0, t
 
 
 def test_text_pipelines_have_no_shuffle(spark):

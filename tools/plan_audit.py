@@ -52,8 +52,6 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ALLOWED: dict[str, set[str]] = {
     # spine bounds / corpus scalars: crossJoin(broadcast(1-row agg))
     "weekly_rental_summary_correlated": {"BroadcastNestedLoopJoin"},
-    "incremental_weekly_summary": {"BroadcastNestedLoopJoin"},
-    "h3_week_spine": {"BroadcastNestedLoopJoin"},
     # broadcast corpus-size / df scalars
     "text_tfidf_topk": {"BroadcastNestedLoopJoin"},
     "text_unigram_logprob": {"BroadcastNestedLoopJoin"},
