@@ -165,7 +165,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5-derived hash family — so the full pipeline (banding, bucket join,
     exact-Jaccard verify) has an exact DuckDB oracle; the recall property is
     pinned separately in tests/test_llm.py."""
-    return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.minhash_lsh_pairs(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("dedup_simhash_signatures", oracle=dedup.simhash_signatures_sql())
@@ -521,8 +521,8 @@ def q_hybrid_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe): Jaccard catches boilerplate, cosine catches paraphrase; the
     merge runs on the two pair relations only."""
     return dedup.hybrid_near_pairs(
-        load_table(spark, sf_dir, "documents", parallelize=True),
-        load_table(spark, sf_dir, "embeddings", parallelize=True),
+        spread(load_table(spark, sf_dir, "documents")),
+        spread(load_table(spark, sf_dir, "embeddings")),
     )
 
 
@@ -544,7 +544,7 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-bigram Shannon entropy per doc — mojibake/base64/key-mash
     detector via the c·ln c entropy identity on (doc, pair) counts."""
-    return text.char_entropy(load_table(spark, sf_dir, "documents", parallelize=True))
+    return text.char_entropy(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -562,7 +562,7 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of heuristic lang-ID vs labeled lang — in-warehouse
     offline eval on a ≤|langs|² grid."""
-    return text.langid_confusion(load_table(spark, sf_dir, "documents", parallelize=True))
+    return text.langid_confusion(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -664,7 +664,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-containment pairs (|A∩B|/min(|A|,|B|)): catches
     quotes/excerpts/doc-in-doc that symmetric Jaccard dedup misses."""
-    return dedup.ngram_containment_pairs(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.ngram_containment_pairs(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("text_boilerplate_filter", oracle=text.boilerplate_filter_sql())
@@ -787,7 +787,7 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation attrition funnel: raw -> exact dedup -> near-dup dominance ->
     Gopher gate, one row per stage with removed counts."""
-    return dedup.dedup_pipeline_funnel(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.dedup_pipeline_funnel(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("vocab_oov_rate", oracle=corpus_stats.vocab_oov_rate_sql())
@@ -801,7 +801,7 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-level curation scorecard: per-source keep/dup rates and
     dominant language — the CCNet-style domain filtering input."""
-    return curation.source_scorecard(load_table(spark, sf_dir, "documents", parallelize=True))
+    return curation.source_scorecard(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("split_leakage_audit", oracle=curation.split_leakage_audit_sql())
@@ -818,7 +818,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_cluster_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution over the resolved near-dup
     clusters — the dedup-savings histogram (n_docs - n_clusters = removable)."""
-    docs = load_table(spark, sf_dir, "documents", parallelize=True)
+    docs = spread(load_table(spark, sf_dir, "documents"))
     return dedup.cluster_size_hist(
         docs, dedup.ngram_jaccard_pairs(docs, threshold=0.1)
     )
@@ -842,7 +842,7 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embedding_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-for-embeddings: banded 24-bit sign projections, pigeonhole
     candidate recall, exact Hamming verify with cosine reporting."""
-    return similarity.embedding_hamming_pairs(load_table(spark, sf_dir, "embeddings", parallelize=True))
+    return similarity.embedding_hamming_pairs(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 @register("embedding_centroid_drift", oracle=embeddings_mod.centroid_drift_sql())
@@ -880,7 +880,7 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_negative_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """word2vec-style count^0.75 negative-sampling table with exact integer
     normalization and cumulative inversion column."""
-    return sampling.negative_sampling_table(load_table(spark, sf_dir, "documents", parallelize=True))
+    return sampling.negative_sampling_table(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -891,7 +891,7 @@ def q_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiprobe hyperplane LSH top-k: queries probe their bucket plus all
     one-bit-flip neighbors — single-table memory, multi-table recall."""
     return similarity.multiprobe_lsh_topk(
-        load_table(spark, sf_dir, "embeddings", parallelize=True), ANN_QUERY_IDS
+        spread(load_table(spark, sf_dir, "embeddings")), ANN_QUERY_IDS
     )
 
 
@@ -950,7 +950,7 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@k of the LSH ranking vs exact cosine — graded ranking quality
     with precomputed integer discount weights, no runtime logs."""
     return similarity.ndcg_eval(
-        load_table(spark, sf_dir, "embeddings", parallelize=True), ANN_QUERY_IDS
+        spread(load_table(spark, sf_dir, "embeddings")), ANN_QUERY_IDS
     )
 
 
@@ -1077,7 +1077,7 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-degree histogram of the exact k-NN graph over the mod-sampled
     half-corpus — the hubness / antihub health check."""
-    return similarity.knn_hubness(load_table(spark, sf_dir, "embeddings", parallelize=True))
+    return similarity.knn_hubness(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 @register("multimodal_aspect_buckets", oracle=multimodal.aspect_buckets_sql())
@@ -1098,7 +1098,7 @@ def q_hash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label purity of the exact k-NN graph over the adaptive
     mod-sample — the classifier-free label-noise audit."""
-    return similarity.knn_purity(load_table(spark, sf_dir, "embeddings", parallelize=True))
+    return similarity.knn_purity(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 @register("dedup_mixture_shift", oracle=dedup.MIXTURE_SHIFT_SQL)
@@ -1133,7 +1133,7 @@ def q_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard-threshold tuning curve: pair volume + affected docs per
     cutoff, pure-integer comparisons, one posting pass."""
-    return dedup.threshold_sweep(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.threshold_sweep(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("sampling_training_manifest", oracle=sampling.training_manifest_sql())
@@ -1165,7 +1165,7 @@ def q_normalization_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_intrinsic_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TwoNN intrinsic-dimension estimate over the adaptive mod-sample
     — micro-nat quantized ratios, one integer division."""
-    return similarity.intrinsic_dimension(load_table(spark, sf_dir, "embeddings", parallelize=True))
+    return similarity.intrinsic_dimension(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 @register("text_encoding_profile", oracle=text.ENCODING_PROFILE_SQL)
@@ -1178,7 +1178,7 @@ def q_encoding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("multimodal_phash_sweep", oracle=multimodal.phash_sweep_sql())
 def q_phash_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-radius tuning curve for perceptual-hash dedup."""
-    return multimodal.phash_sweep(load_table(spark, sf_dir, "documents", parallelize=True))
+    return multimodal.phash_sweep(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("vocab_lang_overlap", oracle=corpus_stats.LANG_OVERLAP_SQL)
@@ -1243,7 +1243,7 @@ def q_payload_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle document-frequency spectrum with pair-work shares — the
     evidence behind the max_df cap."""
-    return dedup.df_spectrum(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.df_spectrum(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -1273,7 +1273,7 @@ def q_dedup_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rank mutual-edge share of the exact k-NN graph — the
     mutual-kNN filter yield / hubness companion."""
-    return similarity.knn_reciprocity(load_table(spark, sf_dir, "embeddings", parallelize=True))
+    return similarity.knn_reciprocity(spread(load_table(spark, sf_dir, "embeddings")))
 
 
 @register("text_dp_noisy_counts", oracle=text.dp_noisy_counts_sql())
@@ -1340,7 +1340,7 @@ def q_lsh_pr_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured precision/recall of the MinHash-LSH candidate stage
     against the exact n-gram-Jaccard ground truth — the operating point
     every banding change must be priced on."""
-    return dedup.lsh_pr_scorecard(load_table(spark, sf_dir, "documents", parallelize=True))
+    return dedup.lsh_pr_scorecard(spread(load_table(spark, sf_dir, "documents")))
 
 
 # --- round 10 ---------------------------------------------------------------------------
@@ -1533,7 +1533,7 @@ def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confident-learning label-noise matrix: per-class confidence
     thresholds gate the (stored lang, predicted lang) joint — the
     estimated mislabel census of the corpus."""
-    return text.label_noise_estimate(load_table(spark, sf_dir, "documents", parallelize=True))
+    return text.label_noise_estimate(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register(
@@ -1552,7 +1552,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bradley-Terry preference strengths per source from deterministic
     adjacent-doc matches — MM rounds in exact micro units, the RLHF
     reward-model likelihood as relational algebra."""
-    return corpus_stats.bradley_terry(load_table(spark, sf_dir, "documents", parallelize=True))
+    return corpus_stats.bradley_terry(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("sampling_unimax", oracle=sampling.unimax_allocation_sql())

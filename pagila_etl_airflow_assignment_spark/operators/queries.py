@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from ..functions import micros
 from ..registry import register
 from ..incremental import backfill
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, spread
 from ..schemas import ORDERS
 from . import analytics, behavior, bitmap, cdc, cmsketch, distributions, features, graph, hll, ivm, layout, profile, quantile_sketch, sequences, stats, temporal, tpch_shapes, warehouse
 
@@ -161,7 +161,7 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column null/distinct/min/max profile of `orders` in ONE
     aggregation pass (exact distincts via Expand; see operators/profile.py)."""
-    return profile.profile_table(load_table(spark, sf_dir, "orders", parallelize=True))
+    return profile.profile_table(spread(load_table(spark, sf_dir, "orders")))
 
 
 VALUE_PERCENTILES_SQL = """
@@ -1606,7 +1606,7 @@ def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap 95% CI for each type's mean value — the distributed
     bootstrap (per-row Poisson(1) weights, no global resampling), fully
     deterministic via md5-derived uniforms."""
-    return stats.poisson_bootstrap_ci(load_table(spark, sf_dir, "events", parallelize=True))
+    return stats.poisson_bootstrap_ci(spread(load_table(spark, sf_dir, "events")))
 
 
 @register(
@@ -1710,14 +1710,14 @@ def q_price_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_walk_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DeepWalk-style skip-gram pair corpus from md5-deterministic random
     walks: unrolled frontier joins, bounded window explode, top-k."""
-    return graph.walk_pair_counts(load_table(spark, sf_dir, "lineitem", parallelize=True))
+    return graph.walk_pair_counts(spread(load_table(spark, sf_dir, "lineitem")))
 
 
 @register("events_quarantine_audit", oracle=profile.quarantine_audit_sql())
 def q_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter quarantine routing: first-violated-rule reason codes,
     per-route populations and shares — the ingest front door."""
-    return profile.quarantine_audit(load_table(spark, sf_dir, "events", parallelize=True))
+    return profile.quarantine_audit(spread(load_table(spark, sf_dir, "events")))
 
 
 from ..llm.sampling import neyman_allocation_sql as _neyman_allocation_sql
@@ -2206,7 +2206,7 @@ def q_fiscal_445(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/A calibration drill: Welch t on the null md5 split — the
     platform health check before trusting any real readout."""
-    return stats.aa_calibration(load_table(spark, sf_dir, "events", parallelize=True))
+    return stats.aa_calibration(spread(load_table(spark, sf_dir, "events")))
 
 
 @register("warehouse_dom_profile", oracle=warehouse.DOM_PROFILE_SQL)
@@ -3136,7 +3136,7 @@ def q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_siegel_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Siegel repeated-median trend — the 50%-breakdown robust line via two
     grid-median layers over the bounded pairwise-slope relation."""
-    return stats.siegel_slope_daily(load_table(spark, sf_dir, "events", parallelize=True))
+    return stats.siegel_slope_daily(spread(load_table(spark, sf_dir, "events")))
 
 
 @register(

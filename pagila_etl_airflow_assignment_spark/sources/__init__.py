@@ -1,4 +1,4 @@
-from .parquet import load_table, load_tables
+from .parquet import load_table
 from .rental import RENTAL_DUCKDB_SQL, rental_view
 
-__all__ = ["load_table", "load_tables", "rental_view", "RENTAL_DUCKDB_SQL"]
+__all__ = ["load_table", "rental_view", "RENTAL_DUCKDB_SQL"]

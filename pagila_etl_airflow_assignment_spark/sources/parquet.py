@@ -48,9 +48,7 @@ def ensure_read_confs(spark: SparkSession) -> None:
             pass  # never let a conf probe break a read on an exotic session
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, parallelize: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (TESTDATA.md) or the ``rental`` source as a
     DataFrame.
 
@@ -59,22 +57,7 @@ def load_table(
     when scanned (e.g. PARQUET_COLUMN_DATA_TYPE_MISMATCH for a nanos-encoded
     rental) instead of returning other types. Any other name, ``events``
     included, is read with an inferred schema (one small Spark job per call).
-
-    ``parallelize=True`` is the unsplittable-input fix (optimization guide
-    §2.5 "one huge unsplittable file ... repartition immediately after the
-    read"): the fixture tables are single-row-group parquet files, so the
-    scan — and every narrow transformation chained onto it — runs as ONE
-    task no matter how many cores the session has. Queries whose dominant
-    cost is per-row compute on the scan side (regex normalization, shingle
-    explosion, embedding-array arithmetic) opt in; a round-robin exchange of
-    the (small) payload buys an n_cores-way parallel compute chain.
-
-    The knob is deliberately opt-in per call site, not blanket: for cheap
-    scan-side compute the extra exchange is a pure loss (measured +0.2-0.5 s
-    on sub-second aggregate queries at sf0.1). It is also scale-adaptive: the
-    repartition fires only when the scan's split count is BELOW the session's
-    default parallelism, so on a real lake layout (many files / row groups,
-    splits >= cores) it is a no-op and no payload shuffle is added.
+    ``events`` is then normalised by ``normalize_event_ts``.
     """
     ensure_read_confs(spark)
     schema = SOURCE_SCHEMAS.get(name)
@@ -82,10 +65,6 @@ def load_table(
     df = reader.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
-    if parallelize:
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
     return df
 
 
@@ -119,31 +98,33 @@ def events_stream(spark: SparkSession, events_path: str) -> DataFrame:
     return normalize_event_ts(spark.readStream.schema(schema).parquet(events_path))
 
 
-SPREAD_ENABLED = True
-
-
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Fan a narrow scan out across cores before CPU-heavy per-row work.
 
     A small parquet file is one input split (row groups don't subdivide), so
     a CPU-bound transform chain — shingling, rolling hashes, signature
     builds, Arrow-batch UDFs — would serialize on a single core no matter
-    how many the session has. At lake scale inputs already arrive in
-    hundreds of splits and this is a pure no-op (the gate checks the planned
-    scan partitioning, never forcing an exchange on data that is already
-    parallel). When it does fire, the round-robin exchange costs one pass
-    over a small input and buys full-cluster parallelism for everything
-    downstream.
+    how many the session has (optimization guide §2.5, "one huge
+    unsplittable file ... repartition immediately after the read"). When the
+    scan's estimated split count is below the session's default parallelism,
+    a round-robin exchange to that parallelism costs one pass over a small
+    input and buys full-cluster parallelism for everything downstream. At
+    lake scale inputs already arrive in hundreds of splits and this is a
+    no-op: the gate estimates the planned scan partitioning from file sizes
+    and runs no Spark job.
 
-    Use ONLY on pipelines that consume the input once before their first
-    shuffle: each plan reference re-executes the exchange (exchange reuse is
-    unreliable across repartition+self-join diamonds), and materializing the
-    input instead (localCheckpoint) was measured strictly worse — full-row
-    block storage of document payloads costs more than re-scanning parquet.
+    Opt in per call site, never blanket: for cheap scan-side compute the
+    exchange is a pure loss (measured +0.2-0.5 s on sub-second aggregate
+    queries at sf0.1; applied after every scan of the 628-query registry,
+    387 cheap-scan queries regressed by +272 s in total). Use it directly
+    on a ``load_table`` scan, and ONLY on pipelines that consume the input
+    once before their first shuffle: each plan reference re-executes the
+    exchange (exchange reuse is unreliable across repartition+self-join
+    diamonds), and materializing the input instead (localCheckpoint) was
+    measured strictly worse — full-row block storage of document payloads
+    costs more than re-scanning parquet.
     """
-    if not SPREAD_ENABLED:
-        return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _estimated_scan_partitions(df) >= target:
         return df
     return df.repartition(target)
@@ -168,23 +149,21 @@ def _byte_string_as_bytes(conf: str) -> int:
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Planned scan parallelism WITHOUT the `df.rdd` bridge (which forces the
-    whole plan through RDD conversion on every call — measurable per-query
-    driver cost). `inputFiles()` is analysis-only; splits are estimated from
-    local file sizes against `spark.sql.files.maxPartitionBytes`. Non-local
-    or unstatable files (object stores) count 1 split each, which at lake
-    scale (hundreds of files) already clears the target → spread() is the
-    intended no-op there."""
+    """Planned scan parallelism without converting the plan to an RDD (that
+    bridge cost 24-41 ms of driver time per call on fixture tables, 4 vCPU,
+    local[4], and can materialise stages under AQE). `inputFiles()` is
+    analysis-only; splits are estimated from local file sizes against
+    `spark.sql.files.maxPartitionBytes`. Non-local or unstatable files
+    (object stores) count 1 split each, which at lake scale (hundreds of
+    files) already clears the target → spread() is the intended no-op there.
+    A plan with no input files estimates 0, so spread() repartitions it,
+    which is still correct."""
     import math
 
     try:
         files = df.inputFiles()
     except Exception:
         files = []
-    if not files:
-        # non-scan plan (in-memory df, post-shuffle): fall back to the exact
-        # count; rare — spread() is documented for use directly on scans
-        return df.rdd.getNumPartitions()
     conf = df.sparkSession.conf.get(
         "spark.sql.files.maxPartitionBytes", "134217728b"
     )
@@ -198,10 +177,6 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
             size = 0
         est += max(1, math.ceil(size / max_bytes)) if size else 1
     return est
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> None:

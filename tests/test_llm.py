@@ -14,12 +14,18 @@ from conftest import SF_SMALL
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return load_table(spark, SF_SMALL, "documents").cache()
+    # unpersist after the module: a cached scan serves every later read of
+    # the same file from memory, so later plan tests would see no file scan
+    df = load_table(spark, SF_SMALL, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return load_table(spark, SF_SMALL, "embeddings").cache()
+    df = load_table(spark, SF_SMALL, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_minhash_lsh_verified_subset_of_exact(spark, docs):

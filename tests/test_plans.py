@@ -7,8 +7,11 @@ the initial plan may show sort-merge joins that AQE later converts.
 
 from __future__ import annotations
 
+import math
+import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pagila_etl_airflow_assignment_spark import queries as _q  # registers
@@ -17,7 +20,11 @@ from pagila_etl_airflow_assignment_spark.plans.weekly_summary import (
 )
 from pagila_etl_airflow_assignment_spark.registry import queries
 from pagila_etl_airflow_assignment_spark.schemas import FIXTURE_TABLES, SOURCE_SCHEMAS
-from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
+from pagila_etl_airflow_assignment_spark.sources.parquet import (
+    _byte_string_as_bytes,
+    load_table,
+    spread,
+)
 from pagila_etl_airflow_assignment_spark.sources.rental import load_rental
 
 from conftest import SF_SMALL, spark_jobs
@@ -67,6 +74,44 @@ def test_declared_reads_make_no_spark_job(spark):
     for t in FIXTURE_TABLES:
         if t in SOURCE_SCHEMAS:
             assert spark_jobs(spark, lambda: load_table(spark, SF_SMALL, t)) == 0, t
+
+
+@pytest.mark.parametrize(
+    "max_partition_bytes, nbytes",
+    [
+        ("128m", 128 << 20),
+        ("134217728b", 128 << 20),
+        ("1g", 1 << 30),
+        ("64kb", 64 << 10),
+        ("4096", 4096),
+        ("1b", 1),
+    ],
+)
+def test_spread_fans_out_only_below_default_parallelism(spark, max_partition_bytes, nbytes):
+    """spread() reads ``spark.sql.files.maxPartitionBytes`` with Spark's unit
+    suffixes, estimates the scan's splits from file sizes without a Spark
+    job, and adds exactly one round-robin exchange to the default
+    parallelism above the scan only while that estimate is below it."""
+    assert _byte_string_as_bytes(max_partition_bytes) == nbytes
+    target = spark.sparkContext.defaultParallelism
+    splits = math.ceil(os.path.getsize(f"{SF_SMALL}/documents.parquet") / nbytes)
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, max_partition_bytes)
+    try:
+        docs = load_table(spark, SF_SMALL, "documents")
+        spread_docs = []
+        assert spark_jobs(spark, lambda: spread_docs.append(spread(docs))) == 0
+        (out,) = spread_docs
+        if splits >= target:
+            assert out is docs
+            return
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange RoundRobinPartitioning") == 1, plan
+        exchange = plan.index(f"Exchange RoundRobinPartitioning({target})")
+        assert exchange < plan.index("FileScan parquet"), plan
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_text_pipelines_have_no_shuffle(spark):
