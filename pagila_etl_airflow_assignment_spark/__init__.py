@@ -6,8 +6,9 @@ watermark-driven incremental ETL computing weekly rental aggregates; see SURVEY.
 re-expressed idiomatically on the Spark DataFrame API / Catalyst:
 
 - ``plans.weekly_summary``   — the flagship full-recompute query
-  (reference_query.sql:1-57) as a single declarative pipeline (cumulative window
-  instead of an O(weeks x rentals) correlated rescan).
+  (reference_query.sql:1-57) as one Spark aggregate of rentals per (rental week,
+  return week) pair, summed in the driver (a prefix sum instead of an
+  O(weeks x rentals) correlated rescan); the incremental runner shares it.
 - ``operators``              — the SURVEY.md §2 operator inventory as named,
   individually-tested functions.
 - ``incremental``            — the watermark / dirty-week / keyed-upsert protocol

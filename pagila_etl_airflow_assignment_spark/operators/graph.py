@@ -2698,12 +2698,6 @@ def _triangle_support(tri: DataFrame) -> DataFrame:
     )
 
 
-def _edge_support(oriented: DataFrame) -> DataFrame:
-    """Per-edge triangle count on an id-oriented edge relation: enumerate
-    each triangle once, explode to its 3 edges, count per edge."""
-    return _triangle_support(_enumerate_triangles(oriented))
-
-
 def ktruss_edges(
     lineitem: DataFrame,
     k: int = KTRUSS_K,

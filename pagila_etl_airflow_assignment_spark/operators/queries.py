@@ -305,7 +305,7 @@ def q_range_click_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "warehouse_same_nation_revenue", oracle=warehouse.LOCAL_SUPPLIER_VOLUME_SQL
+    "warehouse_same_nation_revenue", oracle=warehouse.SAME_NATION_REVENUE_SQL
 )
 def q_same_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unfiltered Q5 shape: revenue by nation where the customer and the
@@ -313,9 +313,8 @@ def q_same_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality (c_nationkey = s_nationkey) rides the broadcast chain as a
     residual, so the fact side still pays only the single orders-key
     shuffle. (The region/year-filtered literal Q5 is
-    warehouse_local_supplier_volume, L-434 — this same-name registration
-    used to silently shadow it.)"""
-    return warehouse.local_supplier_volume(
+    warehouse_local_supplier_volume, L-434.)"""
+    return warehouse.same_nation_revenue(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "orders"),
         load_table(spark, sf_dir, "customer"),
@@ -2078,12 +2077,12 @@ def q_basket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_attribution_time_decay",
-    oracle=temporal.time_decay_attribution_sql(),
+    oracle=temporal.hourly_time_decay_attribution_sql(),
 )
 def q_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-decay multi-touch attribution: power-of-two halving weights,
     per-purchase normalization, exact integer micro credit."""
-    return temporal.time_decay_attribution(load_table(spark, sf_dir, "events"))
+    return temporal.hourly_time_decay_attribution(load_table(spark, sf_dir, "events"))
 
 
 @register("events_type_affinity", oracle=behavior.TYPE_AFFINITY_SQL)
@@ -3513,13 +3512,13 @@ def q_oaxaca_blinder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_attribution_timedecay",
-    oracle=sequences.time_decay_attribution_sql(),
+    oracle=sequences.channel_time_decay_attribution_sql(),
 )
 def q_attribution_timedecay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-decay attribution: 2^(-dt/12h) recency credit inside the
     7-day lookback — the continuous last-touch rule completing the
     linear/position/Shapley/Markov ladder."""
-    return sequences.time_decay_attribution(
+    return sequences.channel_time_decay_attribution(
         load_table(spark, sf_dir, "events")
     )
 

@@ -1711,7 +1711,7 @@ TDECAY_HALFLIFE_H = 12
 TDECAY_WINDOW_DAYS = 7
 
 
-def time_decay_attribution(
+def channel_time_decay_attribution(
     events: DataFrame,
     channels: tuple[str, ...] = TDECAY_CHANNELS,
     halflife_h: int = TDECAY_HALFLIFE_H,
@@ -1778,7 +1778,7 @@ def time_decay_attribution(
     )
 
 
-def time_decay_attribution_sql(
+def channel_time_decay_attribution_sql(
     channels: tuple[str, ...] = TDECAY_CHANNELS,
     halflife_h: int = TDECAY_HALFLIFE_H,
     window_days: int = TDECAY_WINDOW_DAYS,

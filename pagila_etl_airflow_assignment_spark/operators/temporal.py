@@ -451,7 +451,7 @@ DECAY_HALFLIFE_H = 24  # credit halves per day of click->purchase distance
 DECAY_MAX_HALVINGS = 3
 
 
-def time_decay_attribution(
+def hourly_time_decay_attribution(
     events: DataFrame, lookback_seconds: int = ATTRIB_LOOKBACK_SECONDS
 ) -> DataFrame:
     """Time-decay multi-touch attribution — the missing classic next to
@@ -525,7 +525,7 @@ def time_decay_attribution(
     )
 
 
-def time_decay_attribution_sql(
+def hourly_time_decay_attribution_sql(
     lookback_seconds: int = ATTRIB_LOOKBACK_SECONDS,
 ) -> str:
     return f"""

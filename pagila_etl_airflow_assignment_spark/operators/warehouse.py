@@ -630,7 +630,7 @@ def fuzzy_part_match_sql(max_dist: int = FUZZY_MAX_DIST) -> str:
     """
 
 
-def local_supplier_volume(
+def same_nation_revenue(
     lineitem: DataFrame,
     orders: DataFrame,
     customer: DataFrame,
@@ -638,8 +638,9 @@ def local_supplier_volume(
     nation: DataFrame,
     region: DataFrame,
 ) -> DataFrame:
-    """TPC-H Q5 shape — revenue by nation where the customer and the line's
-    SUPPLIER share a nation ("local supplier volume"). The distinctive piece
+    """Unfiltered TPC-H Q5 shape — revenue by nation where the customer and
+    the line's SUPPLIER share a nation. (The region/year-filtered Q5 is
+    ``tpch_shapes.local_supplier_volume``.) The distinctive piece
     beyond star_join_revenue is the c_nationkey = s_nationkey equality
     BETWEEN two different broadcast dimensions: Catalyst evaluates it as a
     residual on the last broadcast join, so the fact side still flows through
@@ -665,7 +666,7 @@ def local_supplier_volume(
     )
 
 
-LOCAL_SUPPLIER_VOLUME_SQL = """
+SAME_NATION_REVENUE_SQL = """
     SELECT r_name AS region,
            n_name AS nation,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))

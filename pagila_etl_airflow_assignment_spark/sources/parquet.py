@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import FIXTURE_TABLES, SOURCE_SCHEMAS
+from ..schemas import SOURCE_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -177,9 +177,3 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
             size = 0
         est += max(1, math.ceil(size / max_bytes)) if size else 1
     return est
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> None:
-    """Register each fixture as a temp view for `spark.sql` pipelines."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

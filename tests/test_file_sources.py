@@ -1,98 +1,8 @@
-"""CSV / JSON-lines sources: schema enforcement + corrupt-row quarantine."""
+"""Landing-zone file ingestion: additive parquet schema evolution and the
+per-file ingestion ledger (`sources/ledger.py`): exactly-once processing,
+corrupt-file quarantine, crash replay and evolving batches."""
 
 from __future__ import annotations
-
-import tempfile
-
-import pytest
-import pyspark.sql.functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-from conftest import SF_SMALL
-
-from pagila_etl_airflow_assignment_spark.sources.files import (
-    read_csv,
-    read_jsonl,
-    split_quarantine,
-)
-
-SCHEMA = StructType(
-    [
-        StructField("id", IntegerType(), True),
-        StructField("name", StringType(), True),
-    ]
-)
-
-
-@pytest.fixture()
-def tdir():
-    with tempfile.TemporaryDirectory(prefix="files-") as d:
-        yield d
-
-
-def test_csv_roundtrip_and_quarantine(spark, tdir):
-    p = f"{tdir}/in.csv"
-    with open(p, "w") as f:
-        f.write("id,name\n1,alice\nnot-an-int,bob\n3,carol\n")
-    df = read_csv(spark, p, SCHEMA)
-    clean, bad = split_quarantine(df)
-    assert {(r["id"], r["name"]) for r in clean.collect()} == {
-        (1, "alice"),
-        (3, "carol"),
-    }
-    assert bad.count() == 1
-    assert "not-an-int" in bad.first()["_corrupt_record"]
-
-
-def test_jsonl_roundtrip_and_quarantine(spark, tdir):
-    p = f"{tdir}/in.jsonl"
-    with open(p, "w") as f:
-        f.write('{"id": 1, "name": "alice"}\n')
-        f.write("this is not json\n")
-        f.write('{"id": 3, "name": "carol"}\n')
-    df = read_jsonl(spark, p, SCHEMA)
-    clean, bad = split_quarantine(df)
-    assert {(r["id"], r["name"]) for r in clean.collect()} == {
-        (1, "alice"),
-        (3, "carol"),
-    }
-    assert bad.count() == 1
-
-
-def test_orc_round_trip_preserves_schema_and_values(spark, tmp_path):
-    from pagila_etl_airflow_assignment_spark.sources.files import (
-        read_orc,
-        write_orc,
-    )
-    from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
-
-    src = load_table(spark, SF_SMALL, "events")
-    path = str(tmp_path / "events_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path, src.schema)
-    assert back.schema == src.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-
-
-def test_orc_scan_pushes_filters_and_prunes_columns(spark, tmp_path):
-    from pagila_etl_airflow_assignment_spark.sources.files import (
-        read_orc,
-        write_orc,
-    )
-    from pagila_etl_airflow_assignment_spark.sources.parquet import load_table
-
-    src = load_table(spark, SF_SMALL, "events")
-    path = str(tmp_path / "events_orc2")
-    write_orc(src, path)
-    q = (
-        read_orc(spark, path, src.schema)
-        .where(F.col("event_type") == "click")
-        .select("event_id", "ts")
-    )
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "event_type" in plan.split("PushedFilters")[1][:200]
-    read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "value" not in read_schema and "props" not in read_schema
 
 
 def test_schema_evolution_merge_reads_both_generations(spark, tmp_path):
@@ -159,26 +69,6 @@ def test_ingestion_ledger_custom_process_barrier(spark, tmp_path):
 
     out = ingest_new_files(spark, str(land), str(tmp_path / "led"), process)
     assert out[0][1] == seen[0] > 0
-
-
-# --- register_views: the spark.sql entry path (round 10) -------------------------------
-
-
-def test_register_views_exposes_fixture_tables_to_sql(spark):
-    """register_views is how a spark.sql-first user mounts the fixture lake;
-    every fixture table must come up queryable under its bare name."""
-    from pagila_etl_airflow_assignment_spark.schemas import FIXTURE_TABLES
-    from pagila_etl_airflow_assignment_spark.sources.parquet import register_views
-
-    register_views(spark, SF_SMALL)
-    for name in FIXTURE_TABLES:
-        assert spark.sql(f"SELECT COUNT(*) AS n FROM {name}").collect()[0].n >= 0
-    # a representative join across two registered views
-    n = spark.sql(
-        "SELECT COUNT(*) AS n FROM nation n JOIN region r"
-        " ON n.n_regionkey = r.r_regionkey"
-    ).collect()[0].n
-    assert n == 25
 
 
 # --- file-stream depth (round 10): quarantine, crash replay, evolution ------------------

@@ -8,8 +8,8 @@ reference intended but never automated.
 (e) crash safety           — crash between summary write and watermark ⇒ rerun converges
 
 plus the driver-side keyed upsert the summary and watermark tables go
-through, the Spark job budget of a run and a later ``as_of`` on an
-unchanged snapshot.
+through, the Spark job budget of a run, a later ``as_of`` on an
+unchanged snapshot and the CLI entry point.
 """
 
 from __future__ import annotations
@@ -17,6 +17,8 @@ from __future__ import annotations
 import datetime as dt
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pyarrow as pa
@@ -269,6 +271,49 @@ def test_run_spark_job_budget(spark, rental, dirs):
     assert noop_jobs <= 2
 
 
+def test_cli_bootstraps_then_noops_and_equals_full(rental, dirs):
+    """The CLI entry point (``jobs.weekly_summary.main``, which ``python -m``
+    and the Airflow task call), run twice in a child process: the first run
+    bootstraps from the default watermark, the rerun on the same source is a
+    no-op, and the target equals the full recompute. A child process, because
+    ``main`` builds its own session and stops it; both runs share its JVM."""
+    target_dir, state_dir = dirs
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m", SPARK_GRAFT_CPUS="2")
+    code = (
+        "import sys\n"
+        "from pagila_etl_airflow_assignment_spark.jobs.weekly_summary import main\n"
+        "main(sys.argv[1:])\n"
+        "main(sys.argv[1:])\n"
+    )
+    argv = ["--source", SF_SMALL, "--target", target_dir, "--state", state_dir]
+    out = subprocess.run(
+        [sys.executable, "-c", code, *argv],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    first, second = out.stdout.splitlines()
+    assert first.startswith(f"incremental: delta_rows={rental.count()} "), first
+    assert "noop=False" in first and "watermark 1900-01-01 00:00:00 ->" in first
+    assert "delta_rows=0 " in second and "noop=True" in second, second
+    assert _target_rows(rental.sparkSession, target_dir) == _full_recompute_rows(rental)
+
+
+def test_dag_task_calls_the_cli_with_env_dirs(monkeypatch):
+    """The Airflow task is the CLI entry point, its three dirs taken from the
+    PAGILA_{SOURCE,TARGET,STATE}_DIR environment variables."""
+    from pagila_etl_airflow_assignment_spark.airflow_dags import weekly_summary_dag
+    from pagila_etl_airflow_assignment_spark.jobs import weekly_summary
+
+    calls = []
+    monkeypatch.setattr(weekly_summary, "main", calls.append)
+    monkeypatch.setenv("PAGILA_SOURCE_DIR", "/src")
+    monkeypatch.setenv("PAGILA_TARGET_DIR", "/tgt")
+    monkeypatch.setenv("PAGILA_STATE_DIR", "/state")
+    weekly_summary_dag._run()
+    assert calls == [["--source", "/src", "--target", "/tgt", "--state", "/state"]]
+
+
 _UPSERT_CASES = {
     # the summary's one-column key: the update wins, other keys survive
     "one-key": (
@@ -277,7 +322,7 @@ _UPSERT_CASES = {
         pa.table({"k": [2, 4], "v": ["B", "d"]}),
         [(1, "a"), (2, "B"), (3, "c"), (4, "d")],
     ),
-    # the streaming sink's two-column key: only full-key matches are replaced
+    # a two-column key: only full-key matches are replaced
     "two-key": (
         ["k", "j"],
         pa.table({"k": [1, 1, 2], "j": ["x", "y", "x"], "v": ["a", "b", "c"]}),

@@ -2619,7 +2619,10 @@ def test_time_decay_attribution_halving_weights(spark):
             (3, dt.datetime(2024, 1, 3, 12, 0), 1, "purchase", 100.0),
         ],
     )
-    rows = {r.click_hour: r for r in temporal.time_decay_attribution(ev).collect()}
+    rows = {
+        r.click_hour: r
+        for r in temporal.hourly_time_decay_attribution(ev).collect()
+    }
     assert rows[11].credited_micro == 800000
     assert rows[10].credited_micro == 200000
     assert rows[11].value_credited_cents == 8000

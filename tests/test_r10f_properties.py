@@ -374,7 +374,7 @@ def _td_ref(users, halflife_h=12, window_days=7):
 @given(users=TD_USERS)
 def test_time_decay_attribution_matches_reference(spark, users):
     from pagila_etl_airflow_assignment_spark.operators.sequences import (
-        time_decay_attribution,
+        channel_time_decay_attribution,
     )
 
     rows = []
@@ -401,6 +401,6 @@ def test_time_decay_attribution_matches_reference(spark, users):
     ).withColumn("ts", F.to_timestamp("ts"))
     got = {
         r["channel"]: (r["n_touches"], r["credit_micro"], r["share_milli"])
-        for r in time_decay_attribution(df).collect()
+        for r in channel_time_decay_attribution(df).collect()
     }
     assert got == _td_ref(users)

@@ -176,45 +176,6 @@ def test_batch_dedup_twin_roundtrips(spark):
     assert got == want
 
 
-def test_stream_merge_sink_equals_batch(spark, events_dir):
-    """Streaming hourly counts MERGE-upserted into a parquet table
-    (foreachBatch) must equal the batch twin — and a REPLAY of the stream
-    into the same target must be a no-op (idempotent merge ⇒ exactly-once
-    effect from at-least-once delivery)."""
-    import tempfile as _tf
-
-    from pagila_etl_airflow_assignment_spark.streaming.sinks import (
-        stream_merge_to_parquet,
-    )
-
-    target = _tf.mkdtemp(prefix="stream-merge-") + "/hourly"
-
-    def run_once():
-        sdf = streaming_hourly_event_counts(spark, events_dir)
-        q = stream_merge_to_parquet(sdf, target, key=["hour_start", "event_type"])
-        q.awaitTermination(120)
-
-    run_once()
-    got1 = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(target).collect()
-    }
-    expected = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in hourly_event_counts(
-            load_table(spark, SF_SMALL, "events")
-        ).collect()
-    }
-    assert got1 == expected
-
-    run_once()  # replay from a fresh checkpoint — merge must converge, not duplicate
-    got2 = {
-        (r["hour_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got2 == expected
-
-
 def test_transform_with_state_running_totals_equal_batch(spark, events_dir):
     """Spark 4 arbitrary-state API (transformWithStateInPandas): the LAST
     emitted running total per user must equal the batch aggregate.
