@@ -3,20 +3,36 @@
 Re-implements the run-loop of etl_script_incremental_pandas.py:24-298 on Spark:
 
   Step 0  empty-target check → watermark reset to 1900-01-01   (etl.py:68-85, I-2)
-  Step 1  read watermark; ONE source aggregate                 (etl.py:87-128, A-2, I-3)
+  Step 1  read watermark; footer probe or ONE aggregate        (etl.py:87-128, A-2, I-3)
   Step 2  affected weeks from changed rows, set-based          (etl.py:130-146, I-4)
   Step 3  trailing-gap backfill weeks; early-exit when none    (etl.py:148-213, I-5, I-6)
   Step 4  recompute + keyed upsert of the affected suffix      (etl.py:216-271, I-7)
   Step 5  advance watermark only after the summary commits     (etl.py:274-284, O-8)
 
 Deliberate departure from the reference (SURVEY.md O-9): Step 4 does NOT loop
-per week re-scanning the source 3x per week. Every run makes exactly one
-fact-table aggregate, grouped by (rental week, return week) and collected to
-the driver (``week_pair_counts``, the third formulation in
-plans/weekly_summary.py). Everything else is plain Python over that
-weeks-sized table: the window bound, the delta row count, the dirty weeks,
-the backfill, the week spine and the cumulative outstanding count. A
-no-change, an ordinary and a late run therefore cost the same one aggregate.
+per week re-scanning the source 3x per week. A run that scans the source
+makes exactly one fact-table aggregate, grouped by (rental week, return
+week) and collected to the driver (``week_pair_counts``, the third
+formulation in plans/weekly_summary.py). Everything else is plain Python
+over that weeks-sized table: the window bound, the delta row count, the
+dirty weeks, the backfill, the week spine and the cumulative outstanding
+count. An ordinary and a late run therefore cost the same one aggregate.
+
+A no-change run over plain parquet files costs no Spark job. The reference
+answers "did anything change?" with ``SELECT MAX(last_update)`` served from
+an index (etl.py:98) and exits early (etl.py:202-213); here the parquet
+footers play the index. Before the aggregate, ``_footer_noop_watermark``
+reads the source's footer statistics in the driver
+(``sources.parquet.footer_maxima``) and returns the no-op report without
+scanning when they prove the aggregate would be a no-op: the target
+exists, ``rental`` is a bare scan of local parquet files that Spark reads
+with no conversion, ``max(last_update)`` is at most the watermark (no delta
+row) and no activity date or ``as_of`` lies past the target's last week (no
+backfill). Anything else runs the aggregate: a derived view such as
+``sources.rental.load_rental`` (its ``last_update`` is computed, so no
+footer bounds it), a Spark-written table (INT96, no statistics), an
+object-store path, or footers without min/max statistics. A no-op run
+writes nothing: the watermark is only published when it moves.
 
 The summary (one row per week) and the watermark (one row) stay in the
 driver: the recomputed suffix is cast to the target schema and both tables
@@ -31,6 +47,7 @@ from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass, field
+from zoneinfo import ZoneInfo
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -43,6 +60,7 @@ from ..plans.weekly_summary import week_pair_counts, weekly_summary_from_pairs
 # without it, until the benchmark reads a run record instead.
 from ..plans.weekly_summary import weekly_rental_summary  # noqa: F401
 from ..schemas import WEEKLY_RENTAL_SUMMARY
+from ..sources.parquet import footer_maxima
 from .upsert import merge_upsert, read_parquet_table
 from .watermark import DEFAULT_WATERMARK_START, WatermarkStore, naive_local
 
@@ -60,6 +78,8 @@ class IncrementalRunReport:
     weeks_written: int = 0
     noop: bool = False
     watermark_reset: bool = False
+    # False when the parquet footers decided a no-change run without a scan
+    source_scanned: bool = True
 
 
 def run_incremental(
@@ -95,18 +115,38 @@ def run_incremental(
 
     # --- Step 0: empty-target → reset watermark (I-2) -------------------------
     target = read_parquet_table(target_dir)
-    watermark_reset = False
-    if target is None or target.num_rows == 0:
+    watermark_reset = target is None or target.num_rows == 0
+    if watermark_reset:
         store.write(process_name, DEFAULT_WATERMARK_START)
-        watermark_reset = True
     _maybe_fail("after_reset")
 
-    # --- Step 1: watermark, then the one source aggregate (A-2, I-3) ---------
+    # --- Step 1: watermark, then the footer probe or the one aggregate -------
+    prev_wm = store.read(process_name)
+
+    def noop(cur_max: dt.datetime, source_scanned: bool) -> IncrementalRunReport:
+        # a watermark that does not move is not rewritten: a no-op writes nothing
+        if cur_max != prev_wm:
+            store.write(process_name, cur_max)
+        return IncrementalRunReport(
+            previous_watermark=prev_wm,
+            new_watermark=cur_max,
+            delta_rows=0,
+            noop=True,
+            watermark_reset=watermark_reset,
+            source_scanned=source_scanned,
+        )
+
+    max_tgt_week = None if watermark_reset else pc.max(target["week_beginning"]).as_py()
+    if max_tgt_week is not None:
+        footer_wm = _footer_noop_watermark(spark, rental, prev_wm, max_tgt_week, as_of)
+        if footer_wm is not None:
+            _maybe_fail("after_window")
+            return noop(footer_wm, source_scanned=False)
+
     # The watermark is read BEFORE the aggregate, and the half-open delta
     # window (prev, cur_max] has cur_max = MAX(last_update) over this very
     # snapshot, so its upper bound never excludes a row and delta membership
     # reduces to last_update > prev_wm, counted inside the same aggregate.
-    prev_wm = store.read(process_name)
     pairs = week_pair_counts(rental, since=prev_wm)
     max_lu = pc.max(pairs["max_lu"]).as_py()
     cur_max = naive_local(max_lu) if max_lu is not None else prev_wm
@@ -122,20 +162,12 @@ def run_incremental(
     # adds are backfilled too.
     summary = weekly_summary_from_pairs(pairs, as_of=as_of)
     weeks = summary["week_beginning"]
-    max_tgt_week = pc.max(target["week_beginning"]).as_py() if target is not None else None
     backfill = {
         w for w in weeks.to_pylist() if max_tgt_week is None or w > max_tgt_week
     }
     affected = sorted(changed | backfill)
     if not affected:
-        store.write(process_name, cur_max)
-        return IncrementalRunReport(
-            previous_watermark=prev_wm,
-            new_watermark=cur_max,
-            delta_rows=delta_rows,
-            noop=True,
-            watermark_reset=watermark_reset,
-        )
+        return noop(cur_max, source_scanned=True)
 
     # --- Step 4: recompute the affected suffix + upsert (I-7, O-9) -----------
     # Suffix expansion (deliberate fix over the reference): a changed row also
@@ -161,11 +193,12 @@ def run_incremental(
         names=_TARGET_SCHEMA.names,
     ).cast(_TARGET_SCHEMA)
     _maybe_fail("before_merge")
-    merge_upsert(target_dir, updates, key=["week_beginning"])
+    merge_upsert(target_dir, updates, key="week_beginning")
     _maybe_fail("before_watermark")
 
     # --- Step 5: advance watermark AFTER the summary commit (O-8) ------------
-    store.write(process_name, cur_max)
+    if cur_max != prev_wm:
+        store.write(process_name, cur_max)
     return IncrementalRunReport(
         previous_watermark=prev_wm,
         new_watermark=cur_max,
@@ -174,3 +207,41 @@ def run_incremental(
         weeks_written=updates.num_rows,
         watermark_reset=watermark_reset,
     )
+
+
+def _footer_noop_watermark(
+    spark: SparkSession,
+    rental: DataFrame,
+    prev_wm: dt.datetime,
+    max_tgt_week: dt.date,
+    as_of: dt.date | None,
+) -> dt.datetime | None:
+    """The watermark a no-op run publishes, when ``rental``'s parquet footers
+    prove that the aggregate path would be a no-op; None when they do not.
+
+    The footer max of ``last_update`` (exact: INT64 statistics) at most the
+    watermark means no delta row, and it is the ``max_lu`` the aggregate
+    would return. The spine ends at the week of the latest rental date,
+    return date or ``as_of`` (``weekly_summary_from_pairs``), so when that
+    week is at most the target's last week there is nothing to backfill.
+    Weeks are truncated in the session time zone, as ``_week`` does."""
+    maxima = footer_maxima(rental, ["last_update", "rental_date", "return_date"])
+    if maxima is None or maxima["last_update"] is None or maxima["rental_date"] is None:
+        return None
+    max_lu = naive_local(maxima["last_update"])
+    if max_lu > prev_wm:
+        return None
+    try:
+        tz = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    except KeyError:  # ZoneInfoNotFoundError: an offset id such as "+02:00"
+        return None
+    latest = max(
+        ts.astimezone(tz).date()
+        for ts in (maxima["rental_date"], maxima["return_date"])
+        if ts is not None
+    )
+    if as_of is not None:
+        latest = max(latest, as_of)
+    if latest - dt.timedelta(days=latest.weekday()) > max_tgt_week:
+        return None
+    return max_lu

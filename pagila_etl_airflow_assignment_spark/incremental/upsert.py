@@ -36,14 +36,15 @@ def read_parquet_table(path: str) -> pa.Table | None:
     return pq.read_table(file)
 
 
-def merge_upsert(target_dir: str, updates: pa.Table, key: list[str]) -> int:
-    """Upsert ``updates`` into the table at ``target_dir`` keyed by ``key``:
-    update rows replace existing rows with the same key, other rows survive.
+def merge_upsert(target_dir: str, updates: pa.Table, key: str) -> int:
+    """Upsert ``updates`` into the table at ``target_dir`` keyed by the one
+    column ``key``: update rows replace existing rows with the same key,
+    other rows survive.
     The table keeps ``updates.schema``. Returns the post-merge row count."""
     merged = updates
     existing = read_parquet_table(target_dir)
     if existing is not None:
-        kept = existing.join(updates.select(key), keys=key, join_type="left anti")
+        kept = existing.join(updates.select([key]), keys=key, join_type="left anti")
         merged = pa.concat_tables(
             [kept.select(updates.column_names).cast(updates.schema), updates]
         )

@@ -61,5 +61,5 @@ class WatermarkStore:
         merge_upsert(
             self.state_dir,
             pa.Table.from_pylist([row], schema=_SCHEMA),
-            key=["process_name"],
+            key="process_name",
         )

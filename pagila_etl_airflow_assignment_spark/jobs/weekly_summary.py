@@ -39,7 +39,8 @@ def main(argv: list[str] | None = None) -> int:
         print(
             f"incremental: delta_rows={report.delta_rows} "
             f"weeks_written={report.weeks_written} noop={report.noop} "
-            f"watermark {report.previous_watermark} -> {report.new_watermark}"
+            f"watermark {report.previous_watermark} -> {report.new_watermark} "
+            f"scanned={report.source_scanned}"
         )
         if args.show:
             spark.read.parquet(args.target).orderBy("week_beginning").show(

@@ -10,13 +10,23 @@ the read runs no Spark job: an undeclared parquet read starts a schema-inference
 job that re-reads file footers on every call. `events` is the one inferred
 read, because its timestamp encoding varies and `normalize_event_ts` branches
 on the inferred type.
+
+`footer_maxima` answers "what is the max of these columns?" from the parquet
+footers in the driver, with no Spark job, when the footers provably bound what
+Spark reads (a bare scan of local files); the incremental runner uses it to
+decide a no-change run without scanning.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import SOURCE_SCHEMAS
 
@@ -96,6 +106,59 @@ def events_stream(spark: SparkSession, events_path: str) -> DataFrame:
     ensure_read_confs(spark)
     schema = spark.read.parquet(events_path).schema
     return normalize_event_ts(spark.readStream.schema(schema).parquet(events_path))
+
+
+def footer_maxima(df: DataFrame, columns: list[str]) -> dict | None:
+    """The max of each of ``columns`` over ``df``, read with pyarrow from its
+    parquet footers in the driver, so no Spark job runs. A column whose
+    values are all null maps to None.
+
+    None unless the footers bound what Spark would read, which is checked,
+    not assumed:
+
+    - ``df`` is a bare file scan: its analyzed plan is one ``LogicalRelation``
+      (a filter, projection or derived view declines), over local ``file:``
+      paths only (object stores decline);
+    - every file's Arrow schema has exactly the names and types of
+      ``to_arrow_schema(df.schema)``, so Spark reads it with no conversion
+      (INT96 as Spark writes it, micros without a UTC zone, nanos and
+      millis all decline);
+    - every non-empty row group has min/max statistics for each column; a
+      chunk whose values are all null has none and is skipped.
+
+    INT64 min/max statistics are exact, so a max read here equals the
+    aggregate ``max`` over the same files."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    files = df.inputFiles()
+    if not files or not all(f.startswith("file:") for f in files):
+        return None
+    shape = lambda schema: [(field.name, field.type) for field in schema]
+    want = shape(to_arrow_schema(df.schema))
+    maxima: dict = dict.fromkeys(columns)
+    for f in files:
+        try:
+            pf = pq.ParquetFile(url2pathname(urlparse(f).path))
+        except (OSError, pa.ArrowException):
+            return None
+        if shape(pf.schema_arrow) != want:
+            return None
+        meta = pf.metadata
+        leaf = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+        for i in range(meta.num_row_groups):
+            group = meta.row_group(i)
+            if group.num_rows == 0:
+                continue
+            for c in columns:
+                stats = group.column(leaf[c]).statistics
+                if stats is not None and stats.has_min_max:
+                    top = stats.max
+                    maxima[c] = top if maxima[c] is None else max(maxima[c], top)
+                elif not (stats is not None and stats.has_null_count
+                          and stats.null_count == group.num_rows):
+                    return None
+    return maxima
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -7,12 +7,14 @@ parquet files, compared order-insensitively after sorting columns by name
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 import os
 import sys
 import uuid
 
 import duckdb
+import pyarrow as pa
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -53,6 +55,23 @@ def pytest_collection_modifyitems(config, items):
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected
+
+
+def rental_arrow(ts_type: pa.DataType) -> pa.Table:
+    """Six rentals over three weeks of January 2024: a Monday 00:00 and a
+    Sunday 23:59:59 boundary, two open rentals and a same-week return."""
+    t = lambda *a: dt.datetime(2024, 1, *a)
+    rental_date = [t(1), t(3, 12), t(7, 23, 59, 59), t(9, 8), t(15), t(16, 1)]
+    return_date = [t(2), None, t(8), t(20, 6), t(21, 23, 59, 59), None]
+    last_update = [r or d for d, r in zip(rental_date, return_date)]
+    return pa.table(
+        {
+            "rental_id": pa.array(range(1, 7), pa.int64()),
+            "rental_date": pa.array(rental_date, ts_type),
+            "return_date": pa.array(return_date, ts_type),
+            "last_update": pa.array(last_update, ts_type),
+        }
+    )
 
 
 @pytest.fixture(scope="session")

@@ -30,7 +30,7 @@ from pagila_etl_airflow_assignment_spark.streaming.aggregations import (
     streaming_hourly_event_counts,
 )
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, rental_arrow
 
 ENCODINGS = ("nanos", "micros_ntz", "micros_utc")
 
@@ -144,23 +144,6 @@ def test_declared_schema_matches_files(spark, sf_dir, table):
     assert shape(SOURCE_SCHEMAS[table]) == shape(inferred)
 
 
-def _rental_arrow(ts_type: pa.DataType) -> pa.Table:
-    """Six rentals over three weeks: a Monday 00:00 and a Sunday 23:59:59
-    boundary, an open rental and a same-week return."""
-    t = lambda *a: dt.datetime(2024, 1, *a)
-    rental_date = [t(1), t(3, 12), t(7, 23, 59, 59), t(9, 8), t(15), t(16, 1)]
-    return_date = [t(2), None, t(8), t(20, 6), t(21, 23, 59, 59), None]
-    last_update = [r or d for d, r in zip(rental_date, return_date)]
-    return pa.table(
-        {
-            "rental_id": pa.array(range(1, 7), pa.int64()),
-            "rental_date": pa.array(rental_date, ts_type),
-            "return_date": pa.array(return_date, ts_type),
-            "last_update": pa.array(last_update, ts_type),
-        }
-    )
-
-
 RENTAL_ENCODINGS = {
     "micros_utc": pa.timestamp("us", tz="UTC"),
     "micros_ntz": pa.timestamp("us"),
@@ -173,7 +156,7 @@ def rental_dirs():
     dirs = {}
     for name, ts_type in RENTAL_ENCODINGS.items():
         d = tempfile.mkdtemp(prefix=f"rental-{name}-")
-        pq.write_table(_rental_arrow(ts_type), f"{d}/rental.parquet", version="2.6")
+        pq.write_table(rental_arrow(ts_type), f"{d}/rental.parquet", version="2.6")
         dirs[name] = d
     yield dirs
     for d in dirs.values():
